@@ -33,7 +33,7 @@ headline regression): the per-rep ``System.gc()`` is GONE; between
 reps only the blocking unpersist sweep runs (the actual r10 leak
 fix), and the GC cycle moved to between QUERIES (absorbed by the next
 query's untimed throwaway). Evidence from two same-session A/Bs
-(tools/bench_ab.py, tools/bench_ab2.py): (a) the r11 discipline
+(round-12 one-off harness A/Bs, since retired): (a) the r11 discipline
 (sweep+gc per rep) vs cleanup-between-queries-only ran 13.987 vs
 12.902 s (+8.4%) with dedup_ngram_jaccard at +72% (2.723 vs 1.585 s);
 (b) isolating the gc — sweep+gc vs sweep-only vs nothing per rep —

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from . import queries as q
 from .analysis_sql import ANALYSIS_QUERIES
-from .schemas import COMMENTS_SCHEMA
+from .sources.reddit import comments_df
 from .stats import daily_subreddit_stats, write_subreddit_stats
 
 
@@ -55,7 +55,7 @@ class Engine:
             comments = (
                 self.comments
                 if self._comments_path is not None
-                else self.spark.createDataFrame([], COMMENTS_SCHEMA)
+                else comments_df(self.spark, [])
             )
             q.register_views(self.posts, comments)
             self._registered = True

@@ -8634,6 +8634,12 @@ def deming_regression(
     on both engines, one double expression (population 1/n moments
     — the scale cancels in β).
 
+    Tie rule: inputs snap to integer micros as ``floor(v·1e6 + 0.5)``,
+    i.e. round half UP (toward +inf), not half away from zero. A value
+    exactly on a .5-micro boundary rounds up for either sign: +2.5
+    micros → 3, but −2.5 micros → −2 (half-away would give −3). For
+    positive inputs the two rules agree.
+
     Plan at scale: ONE map-side-combined aggregate.
 
     Returns one row: (n BIGINT, slope, intercept, pearson_r) — the
@@ -9810,23 +9816,28 @@ def kuiper_two_sample(
 _HOEFFDING_SWEEP_MIN_CELLS = 10_000
 
 #: plan-choice memo for the hoeffding lane probe, keyed by
-#: (applicationId, input file set, x_col, y_col) — the
-#: dedup._memo_prefix_choice contract verbatim: the probe is one
-#: eager count over the reduced cell frame PER BUILD, both lanes are
-#: result-identical (parity-tested), only the CHOICE is reused, rows
-#: always recompute; in-memory frames (no input files) re-probe
-#: every build, and a path rewritten in place within one application
-#: replays the original (still lossless) decision.
+#: (applicationId, unanalyzed-plan semanticHash of the cell aggregate)
+#: — the scale_lanes.resolve_lane contract: the probe is one eager
+#: count over the reduced cell frame, both lanes are result-identical
+#: (parity-tested), only the CHOICE is reused, rows always recompute.
+#: The plan hash covers every upstream filter and projection, so a
+#: filtered call never replays its count for the unfiltered frame; a
+#: path rewritten in place within one application can still replay
+#: the original count, and the join lane's plan-embedded guard then
+#: refuses loudly.
 _HOEFFDING_LANE_MEMO: dict = {}
 
 
-def _memo_hoeffding_cells(df, cells, x_col, y_col) -> int:
-    sc = df.sparkSession.sparkContext
-    key = None
+def _memo_hoeffding_cells(grid, cells) -> int:
+    """Distinct-cell count of ``cells`` (the checkpointed form of
+    ``grid``), memoized on ``grid``'s plan: the checkpoint's own plan
+    is a fresh RDD leaf per build and would never hit."""
+    sc = grid.sparkSession.sparkContext
     try:
-        files = df.inputFiles()
-        if files:
-            key = (sc.applicationId, tuple(sorted(files)), x_col, y_col)
+        key = (
+            sc.applicationId,
+            grid._jdf.queryExecution().logical().semanticHash(),
+        )
     except Exception:  # noqa: BLE001 - fall through to the live probe
         key = None
     if key and key in _HOEFFDING_LANE_MEMO:
@@ -9978,19 +9989,20 @@ def hoeffding_d(
         F.col(x_col).cast("long").alias("__x"),
         F.col(y_col).cast("long").alias("__y"),
     )
-    cells = base.groupBy("__x", "__y").agg(
+    grid = base.groupBy("__x", "__y").agg(
         F.count("*").cast("long").alias("__f")
+    )
     # pin the tiny cell frame: THREE consumers (guard count, both
     # dominance-join sides) would otherwise each re-scan the fact —
     # one lazy localCheckpoint collapses them to ONE fact pass
-    ).localCheckpoint(eager=False)
+    cells = grid.localCheckpoint(eager=False)
     # Round-14 lane choice (judge r13 #4, guide §3): see the "Plan at
     # scale" docstring block. The eager probe is memoized per
-    # (applicationId, files, cols); the join lane keeps a
+    # (applicationId, cell-plan semanticHash); the join lane keeps a
     # plan-embedded guard AT the cut-over so a stale memo on mutated
     # files refuses loudly (the old behaviour); the sweep lane is
     # guarded by max_cells.
-    probed = _memo_hoeffding_cells(df, cells, x_col, y_col)
+    probed = _memo_hoeffding_cells(grid, cells)
     use_sweep = probed > _HOEFFDING_SWEEP_MIN_CELLS
     # the caller's max_cells stays the binding refusal on BOTH lanes;
     # the join lane additionally refuses at the cut-over (a stale memo

@@ -8,20 +8,31 @@ fetch, and per-stage error containment all mirror the reference
     extract -> [empty guard] -> transform -> load posts
     -> top-10 by score -> fetch+load comments -> stats upsert
 
-Divergences (documented): the per-subreddit driver loop collapses into
-one call over many subreddits (their frames union before a single
-write — one Spark job instead of N), and the stats upsert uses dynamic
-partition overwrite instead of SQLite INSERT OR REPLACE (same
-last-writer-wins semantics, sinks/writers.py).
+Per-batch Spark budget: three jobs per subreddit batch — the posts
+write, the comments write and the stats upsert. Everything else is
+derived on the driver from the records it already holds: posts loaded
+is the record count (the transform is row-preserving), the top-N posts
+come from a ``heapq`` over the records in the order
+``score DESC NULLS LAST, id ASC``, and the stats row count is an
+``Observation`` filled in by the upsert itself. The batch frames are
+one-partition LocalRelations (sources/reddit.py), so re-reading them
+for the stats aggregate costs no extra job and no cache.
+
+Divergences (documented): ties on the top-N score break by ascending
+id (the reference's pandas ``nlargest`` keeps listing order), and the
+stats upsert uses dynamic partition overwrite instead of SQLite
+INSERT OR REPLACE (same last-writer-wins semantics, sinks/writers.py).
 """
 
 from __future__ import annotations
 
+import heapq
 import logging
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .sinks.writers import append_parquet
@@ -93,37 +104,37 @@ def _run_one(
         log.warning("no posts extracted for r/%s", sub)
         return
 
-    raw = posts_df(spark, records)
-    transformed = transform_posts(raw)
-    if transformed.isEmpty():  # empty guard (script.py:303-305)
-        return
-    transformed.persist()
-    try:
-        append_parquet(transformed, posts_path, partition_by=("subreddit",))
-        res.posts_loaded = transformed.count()
+    # transform_posts is row-preserving, so the guard above also stands
+    # for the reference's post-transform guard (script.py:303-305)
+    transformed = transform_posts(posts_df(spark, records))
+    append_parquet(transformed, posts_path, partition_by=("subreddit",))
+    res.posts_loaded = len(records)
 
-        # comments for the top-N posts by score (script.py:311-315);
-        # TakeOrderedAndProject, the nlargest analogue
-        top_ids = [
-            r.id
-            for r in transformed.select("id", "score")
-            .orderBy(F.desc("score"), F.asc("id"))
-            .limit(top_n)
-            .collect()
-        ]
-        comment_records = []
-        for pid in top_ids:
-            comment_records.extend(
-                source.fetch_comments(pid, limit=comments_limit)
-            )
-        if comment_records:
-            cdf = comments_df(spark, comment_records)
-            append_parquet(cdf, comments_path, partition_by=())
-            res.comments_loaded = len(comment_records)
+    # comments for the top-N posts by score (script.py:311-315)
+    comment_records = []
+    for pid in top_post_ids(records, top_n):
+        comment_records.extend(source.fetch_comments(pid, limit=comments_limit))
+    if comment_records:
+        cdf = comments_df(spark, comment_records)
+        append_parquet(cdf, comments_path, partition_by=())
+        res.comments_loaded = len(comment_records)
 
-        # daily stats upsert (script.py:320, :259-286)
-        stats = daily_subreddit_stats(transformed, as_of=as_of, subreddit=sub)
-        write_subreddit_stats(stats, stats_path)
-        res.stats_rows = stats.count()
-    finally:
-        transformed.unpersist()
+    # daily stats upsert (script.py:320, :259-286); the row count rides
+    # on the upsert's own job
+    stats = daily_subreddit_stats(transformed, as_of=as_of, subreddit=sub)
+    written = Observation()
+    stats = stats.observe(written, F.count(F.lit(1)).alias("rows"))
+    write_subreddit_stats(stats, stats_path)
+    res.stats_rows = written.get["rows"]
+
+
+def top_post_ids(records: Sequence[dict[str, Any]], n: int) -> list[str]:
+    """Ids of the ``n`` top records in ``ORDER BY score DESC NULLS
+    LAST, id ASC`` order (the nlargest analogue). Python orders str by
+    code point, which is the order of Spark's UTF-8 byte comparison."""
+
+    def key(r: dict[str, Any]) -> tuple:
+        score = r.get("score")
+        return (score is None, -score if score is not None else 0, r["id"])
+
+    return [r["id"] for r in heapq.nsmallest(n, records, key=key)]

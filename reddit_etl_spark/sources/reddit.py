@@ -10,9 +10,25 @@ conversion (script.py:131-147), and a flattened comment-tree scan
 Spark-native shape: the connector is an interface returning plain row
 dicts; ``posts_df``/``comments_df`` lift them into DataFrames under
 the explicit schemas. Network fetch stays driver-side (the listing API
-is inherently sequential per subreddit) but multiple subreddits
-parallelize trivially by unioning per-subreddit frames; rate limiting
-lives INSIDE the connector (S5), not in query code.
+is inherently sequential per subreddit) and rate limiting lives INSIDE
+the connector (S5), not in query code.
+
+The lift goes through Arrow: the records become one ``pyarrow.Table``
+under ``to_arrow_schema`` of the explicit schema, and
+``createDataFrame(table, schema)`` turns it into a JVM-only
+``LocalRelation``. The list path (``createDataFrame(list, schema)``)
+would instead pickle the rows into a ``PythonRDD``, so every scan of
+the batch would start one Python worker per partition. The lifted
+frame is a single partition (``coalesce(1)``): the rows already sit in
+one process and a batch is capped by the listing limit, so splitting
+it would only write one small file per core into the lake, which every
+later query then has to open.
+
+The lift keeps the list path's contract: a naive datetime is
+driver-local time and an aware one is converted to UTC (both exactly
+as ``TimestampType.toInternal``), a ``None`` in a non-nullable field
+raises ``ValueError``, extra dict keys are ignored and missing keys
+become NULL.
 
 PRAW itself is optional — import-gated, since the engine's query
 surface must work without network or credentials. ``MockRedditSource``
@@ -26,7 +42,10 @@ import time
 from collections.abc import Iterable, Sequence
 from typing import Any, Protocol
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType
 
 from ..schemas import COMMENTS_SCHEMA, POSTS_RAW_SCHEMA
 
@@ -194,13 +213,34 @@ class MockRedditSource:
         return self._comments.get(post_id, [])[:limit]
 
 
+def _lift(
+    spark: SparkSession, records: Sequence[dict[str, Any]], schema: StructType
+) -> DataFrame:
+    """Records -> a one-partition LocalRelation under ``schema``.
+
+    Timestamps are handed to Arrow as epoch microseconds computed by
+    ``TimestampType.toInternal`` itself, so aware, naive and ``None``
+    values land exactly where the list path puts them (pyarrow would
+    read a naive datetime as UTC rather than driver-local time)."""
+    columns = {}
+    for f in schema.fields:
+        values = [r.get(f.name) for r in records]
+        if not f.nullable and None in values:
+            raise ValueError(
+                f"field {f.name}: this field is not nullable, but got None"
+            )
+        if isinstance(f.dataType, TimestampType):
+            values = [f.dataType.toInternal(v) for v in values]
+        columns[f.name] = values
+    table = pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema).coalesce(1)
+
+
 def posts_df(spark: SparkSession, records: Sequence[dict[str, Any]]) -> DataFrame:
     """Lift raw post records into the explicit 15-column schema —
     never inferred (SURVEY §1.2)."""
-    rows = [tuple(r.get(f.name) for f in POSTS_RAW_SCHEMA.fields) for r in records]
-    return spark.createDataFrame(rows, POSTS_RAW_SCHEMA)
+    return _lift(spark, records, POSTS_RAW_SCHEMA)
 
 
 def comments_df(spark: SparkSession, records: Sequence[dict[str, Any]]) -> DataFrame:
-    rows = [tuple(r.get(f.name) for f in COMMENTS_SCHEMA.fields) for r in records]
-    return spark.createDataFrame(rows, COMMENTS_SCHEMA)
+    return _lift(spark, records, COMMENTS_SCHEMA)

@@ -4,15 +4,18 @@
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
-from reddit_etl_spark.pipeline import run_pipeline
+from reddit_etl_spark.pipeline import run_pipeline, top_post_ids
 from reddit_etl_spark.sinks.writers import append_parquet, upsert_partitioned
 from reddit_etl_spark.sources.reddit import (
     MockRedditSource,
     RateLimiter,
+    comments_df,
     posts_df,
 )
 from reddit_etl_spark.stats import daily_subreddit_stats, write_subreddit_stats
@@ -125,6 +128,165 @@ def test_pipeline_end_to_end(spark, tmp_path):
     )
     stats = spark.read.parquet(str(tmp_path / "stats"))
     assert stats.count() == 2  # one row per (subreddit, as_of date)
+
+
+def _tied_posts() -> list[dict]:
+    """Posts with tied and NULL scores, listed out of id order."""
+    scores = [5, None, 7, 5, 7, None, -1, 5, 0, 7, None, 3]
+    ids = ["p09", "p03", "p11", "p01", "p05", "p00", "p07", "p02",
+           "p10", "p04", "p08", "p06"]
+    return [
+        {**_mock_posts()[0], "id": i, "score": s} for i, s in zip(ids, scores)
+    ]
+
+
+@pytest.mark.parametrize("n", [0, 1, 3, 5, 9, 12, 20])
+def test_top_post_ids_matches_spark_order(spark, n):
+    """The driver-side top-N picks the ids of ORDER BY score DESC NULLS
+    LAST, id ASC LIMIT n over the lifted frame, ties and NULLs
+    included."""
+    records = _tied_posts()
+    want = [
+        r.id
+        for r in posts_df(spark, records)
+        .orderBy(F.desc_nulls_last("score"), F.asc("id"))
+        .limit(n)
+        .collect()
+    ]
+    assert top_post_ids(records, n) == want
+
+
+def test_pipeline_counts_match_lake(spark, tmp_path):
+    """posts_loaded, comments_loaded and stats_rows, all derived on the
+    driver, equal what the lake holds — stats_rows 0 included, when
+    as_of matches no post."""
+    posts = _tied_posts()
+    for p in posts:
+        p["subreddit"] = "ties"
+    src = MockRedditSource(posts, _mock_comments(posts))
+    paths = {t: str(tmp_path / t) for t in ("posts", "comments", "stats")}
+
+    def run(as_of):
+        (res,) = run_pipeline(
+            spark, src, ["ties"], paths["posts"], paths["comments"],
+            paths["stats"], top_n_for_comments=4, comments_limit=2,
+            as_of=F.lit(as_of),
+        )
+        assert not res.errors
+        return res
+
+    hit = run(AS_OF)
+    lake = spark.read.parquet(paths["posts"])
+    assert hit.posts_loaded == lake.count() == len(posts)
+    stored = {r.post_id for r in spark.read.parquet(paths["comments"]).collect()}
+    assert stored == set(top_post_ids(posts, 4))
+    assert hit.comments_loaded == 4 * 2
+    stats = spark.read.parquet(paths["stats"])
+    assert hit.stats_rows == stats.count() == 1
+
+    miss = run(dt.date(2030, 1, 1))
+    assert miss.stats_rows == 0
+    stats = spark.read.parquet(paths["stats"])
+    assert stats.filter(F.col("date") == dt.date(2030, 1, 1)).count() == 0
+    assert miss.posts_loaded == len(posts)
+    assert spark.read.parquet(paths["posts"]).count() == 2 * len(posts)
+
+
+def test_pipeline_batch_runs_at_most_three_jobs(spark, tmp_path):
+    """One batch: the posts write, the comments write and the stats
+    upsert, nothing else."""
+    posts = _mock_posts()
+    src = MockRedditSource(posts, _mock_comments(posts))
+    sc = spark.sparkContext
+    group = "test-pipeline-batch-jobs"
+    sc.setJobGroup(group, "one run_pipeline batch")
+    try:
+        (res,) = run_pipeline(
+            spark, src, ["python"], str(tmp_path / "posts"),
+            str(tmp_path / "comments"), str(tmp_path / "stats"),
+            as_of=F.lit(AS_OF),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not res.errors and res.comments_loaded > 0
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+_TS = TimestampType()
+_STAMPS = [
+    dt.datetime(2025, 9, 1, 8, 30, 0, 123457, tzinfo=dt.timezone.utc),
+    dt.datetime(2025, 9, 1, 8, 30, tzinfo=dt.timezone(dt.timedelta(hours=5))),
+    dt.datetime(2025, 9, 1, 8, 30, 0, 654321),  # naive: driver-local time
+    None,
+]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "Asia/Tokyo"])
+def test_lift_timestamps_match_list_path(spark, monkeypatch, tz):
+    """Aware, naive and None timestamps land where
+    TimestampType.toInternal puts them, in both lifts — with the
+    driver's local time zone off UTC too, where a naive datetime read
+    as UTC would land hours away."""
+    monkeypatch.setenv("TZ", tz)
+    time.tzset()
+    try:
+        posts = [
+            {**_mock_posts()[0], "id": f"p{i}", "created_utc": t}
+            for i, t in enumerate(_STAMPS)
+        ]
+        comment = _mock_comments(_mock_posts())[0]
+        comments = [
+            {**comment, "id": f"c{i}", "created_utc": t,
+             "extracted_at": _STAMPS[-1 - i]}
+            for i, t in enumerate(_STAMPS)
+        ]
+        got = posts_df(spark, posts).selectExpr(
+            "unix_micros(created_utc)").collect()
+        assert [r[0] for r in got] == [_TS.toInternal(t) for t in _STAMPS]
+        got = comments_df(spark, comments).selectExpr(
+            "unix_micros(created_utc)", "unix_micros(extracted_at)").collect()
+        assert [tuple(r) for r in got] == [
+            (_TS.toInternal(t), _TS.toInternal(_STAMPS[-1 - i]))
+            for i, t in enumerate(_STAMPS)
+        ]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_lift_keys_and_nullability(spark):
+    """Extra keys are ignored, missing keys become NULL, and a None in
+    the non-nullable id raises."""
+    post = {**_mock_posts()[1], "not_a_column": 1}
+    del post["selftext"]
+    (row,) = posts_df(spark, [post]).collect()
+    assert row.selftext is None and row.id == post["id"]
+    with pytest.raises(ValueError, match="id"):
+        posts_df(spark, [{**post, "id": None}])
+    comment = _mock_comments(_mock_posts())[0]
+    with pytest.raises(ValueError, match="id"):
+        comments_df(spark, [{**comment, "id": None}])
+
+
+def test_lift_is_one_partition_local_relation(spark):
+    """No PythonRDD under the lifted frames: they are one-partition
+    LocalRelations that run without Python workers."""
+    posts = _mock_posts()
+    for df in (
+        posts_df(spark, posts),
+        comments_df(spark, _mock_comments(posts)),
+        comments_df(spark, []),
+    ):
+        qe = df._jdf.queryExecution()
+        leaves = qe.optimizedPlan().collectLeaves()
+        assert [
+            leaves.apply(i).getClass().getSimpleName()
+            for i in range(leaves.size())
+        ] == ["LocalRelation"]
+        rdd = qe.toRdd()
+        assert "PythonRDD" not in rdd.toDebugString()
+        assert rdd.getNumPartitions() == 1
 
 
 def test_upsert_idempotent_and_replacing(spark, tmp_path, posts):

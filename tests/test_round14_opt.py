@@ -195,6 +195,31 @@ def test_hoeffding_lane_parity(spark):
     assert join_out[0]["n"] == 5000
 
 
+def test_hoeffding_memo_keys_on_the_plan(spark, tmp_path):
+    """A filtered call must not hand its cell count to a later call on
+    the unfiltered frame of the same files: the stale 360-cell count
+    picked the join lane for a 12k-cell grid, whose 10k-cell guard
+    then refused a call within max_cells."""
+    import reddit_etl_spark.operators.relational as rel
+
+    path = str(tmp_path / "grid")
+    spark.range(0, 12_000).selectExpr(
+        "id % 100 AS x", "id DIV 100 AS y"
+    ).write.parquet(path)
+    df = spark.read.parquet(path)
+    rel._HOEFFDING_LANE_MEMO.clear()
+    try:
+        small = rel.hoeffding_d(df.filter("x < 3"), "x", "y").collect()
+        full = rel.hoeffding_d(df, "x", "y").collect()
+        assert len(rel._HOEFFDING_LANE_MEMO) == 2
+        # an identical rebuild hits the memo instead of adding a key
+        assert rel.hoeffding_d(df, "x", "y").collect() == full
+        assert len(rel._HOEFFDING_LANE_MEMO) == 2
+    finally:
+        rel._HOEFFDING_LANE_MEMO.clear()
+    assert (small[0]["n_cells"], full[0]["n_cells"]) == (360, 12_000)
+
+
 def test_hoeffding_sweep_kernel_brute_force():
     """All seven dominance/marginal stats from the Fenwick sweep match
     a brute-force O(C²) reference on a random weighted grid."""
