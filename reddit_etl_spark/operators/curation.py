@@ -130,16 +130,16 @@ def decontaminate(
     map-side hash-join probe: no shuffle of corpus data at all. If the
     benchmark outgrows broadcast size, drop the hint and the same plan
     becomes a shuffle join on the gram key."""
-    from .dedup import shingles_col
+    from .dedup import TOKS, tokenize, word_shingles
     from .util import fan_out
 
     # fan_out BEFORE shingling: a single-row-group input would otherwise
     # run the CPU-heavy gram expansion on one core (see dedup.py)
-    doc_grams = fan_out(docs).select(
-        F.col(id_col), F.explode(shingles_col(text_col, n)).alias("__gram")
+    doc_grams = tokenize(fan_out(docs), text_col, id_col).select(
+        F.col(id_col), F.explode(word_shingles(F.col(TOKS), n)).alias("__gram")
     )
-    bench_grams = benchmark.select(
-        F.explode(shingles_col(text_col, n)).alias("__gram")
+    bench_grams = tokenize(benchmark, text_col).select(
+        F.explode(word_shingles(F.col(TOKS), n)).alias("__gram")
     ).distinct()
     return (
         doc_grams.join(F.broadcast(bench_grams), "__gram")
@@ -268,15 +268,14 @@ def decontaminate_bloom(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    from .dedup import shingles_col
+    from .dedup import TOKS, tokenize, word_shingles
     from .util import fan_out
 
     bench_hashes = np.array(
         [
             r[0]
-            for r in benchmark.select(
-                F.explode(shingles_col(text_col, n)).alias("__g")
-            )
+            for r in tokenize(benchmark, text_col)
+            .select(F.explode(word_shingles(F.col(TOKS), n)).alias("__g"))
             .select(F.xxhash64("__g").alias("__h"))
             .distinct()
             .collect()
@@ -322,11 +321,17 @@ def decontaminate_bloom(
         out[nonempty] = sums
         return pd.Series(out)
 
-    hashed = fan_out(docs).select(
+    # the UDF is deterministic, but marked otherwise so the optimizer
+    # keeps the n_flagged_grams filter above it: pushed through the
+    # projections, the filter re-ran the UDF with the tokenizer inlined
+    # into the window lambda, and the projection then ran it again
+    bloom_hits = bloom_hits.asNondeterministic()
+
+    hashed = tokenize(fan_out(docs), text_col, id_col).select(
         F.col(id_col),
-        F.transform(shingles_col(text_col, n), lambda g: F.xxhash64(g)).alias(
-            "__gh"
-        ),
+        F.transform(
+            word_shingles(F.col(TOKS), n), lambda g: F.xxhash64(g)
+        ).alias("__gh"),
     )
     return (
         hashed.select(
@@ -345,7 +350,7 @@ def boilerplate_grams(
 ) -> DataFrame:
     """Corpus-level boilerplate n-grams: distinct word n-grams that
     occur in at least ``min_docs`` distinct documents (navigation
-    chrome, license headers, template text). Because ``shingles_col``
+    chrome, license headers, template text). Because ``word_shingles``
     is already distinct-per-document, ``COUNT(*)`` after the explode IS
     the document frequency — no countDistinct expansion needed.
 
@@ -353,11 +358,11 @@ def boilerplate_grams(
     carries at most |distinct grams per partition| rows. The result is
     tiny relative to the corpus (boilerplate is by definition shared),
     so downstream consumers broadcast it."""
-    from .dedup import shingles_col
+    from .dedup import TOKS, tokenize, word_shingles
     from .util import fan_out
 
-    grams = fan_out(docs).select(
-        F.explode(shingles_col(text_col, n)).alias("gram")
+    grams = tokenize(fan_out(docs), text_col).select(
+        F.explode(word_shingles(F.col(TOKS), n)).alias("gram")
     )
     return (
         grams.groupBy("gram")
@@ -382,24 +387,28 @@ def boilerplate_fraction(
     at 100 TB the first pass's output is persisted once and the probe
     is a broadcast hash join against the scan, so no corpus data is
     ever shuffled in the probe pass."""
-    from .dedup import shingles_col
+    from .dedup import TOKS, tokenize, word_shingles
     from .util import fan_out
 
     bp = boilerplate_grams(docs, id_col, text_col, n, min_docs).select(
         "gram", F.lit(1).alias("__bp")
     )
     # project the gram array ONCE: Catalyst does not CSE the heavy
-    # normalize+shingle expression across size() and explode(), and
-    # evaluating it twice per document doubles the probe pass's CPU
+    # shingle expression across size() and explode(), and evaluating
+    # it twice per document doubles the probe pass's CPU. explode_outer
+    # because an inner explode of a column makes the optimizer infer
+    # size(__grams) > 0 and push that filter below both projections,
+    # inlining the tokenizer into the window lambda again; the rows are
+    # the same, since word_shingles never returns an empty or NULL array
     doc_grams = (
-        fan_out(docs)
+        tokenize(fan_out(docs), text_col, id_col)
         .select(
-            F.col(id_col), shingles_col(text_col, n).alias("__grams")
+            F.col(id_col), word_shingles(F.col(TOKS), n).alias("__grams")
         )
         .select(
             F.col(id_col),
             F.size("__grams").cast("long").alias("__n_grams"),
-            F.explode("__grams").alias("gram"),
+            F.explode_outer("__grams").alias("gram"),
         )
     )
     return (

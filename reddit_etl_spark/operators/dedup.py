@@ -67,38 +67,75 @@ def _splitmix64(z: np.ndarray) -> np.ndarray:
     return z
 
 
-def shingles_col(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text.
+#: name of the staged token-array column (``tokenize``)
+TOKS = "__toks"
 
-    Pure array expressions: split -> sliding windows via
-    transform(sequence(...)) -> concat_ws -> array_distinct. Documents
-    shorter than n tokens yield their full token string as the single
-    shingle (so they can still match exact copies of themselves).
-    """
+
+def tokens_col(text: Column | str) -> Column:
+    """THE shingle tokenizer: lowercase, split on maximal whitespace
+    runs, drop the empty edge tokens.
+
+    ONE regex split instead of normalize_text_col's
+    regexp_replace(\\s+ -> " ") + split(" "), without a second copy of
+    the corpus for the replace pass. split(\\s+) emits an empty token
+    at each edge where the text starts or ends with whitespace;
+    array_remove drops them on the small token ARRAY rather than
+    edge-trimming the corpus string (F.trim strips only 0x20, so a
+    trim+split form leaks '' tokens for '\\t'/'\\n'-padded text). A
+    maximal-\\s+ split can produce '' only at the edges, so
+    array_remove(toks, '') is exactly edge-stripping with
+    all-whitespace semantics: the token lists equal the
+    normalize_text_col path's for every input, including
+    all-whitespace, empty and NULL docs. normalize_text_col itself is
+    untouched (fingerprints and content keys depend on its string)."""
     t = F.col(text) if isinstance(text, str) else text
-    # tokenize with ONE regex split instead of normalize_text_col's
-    # regexp_replace(\s+->" ") + split(" ") (round-13 opt, guide §1.2
-    # per-task work), without materializing a second copy of the
-    # corpus for the replace pass. split(\s+) emits empty edge tokens
-    # when the text starts/ends with whitespace; array_remove drops
-    # them on the (small) token ARRAY rather than edge-trimming the
-    # corpus string (F.trim strips only 0x20, so the r13 trim+split
-    # form leaked '' tokens for '\t'/'\n'-padded text — advisor r13
-    # high finding; a maximal-\s+ split can produce '' ONLY at the
-    # edges, so array_remove(toks, '') is exactly edge-stripping
-    # with all-whitespace semantics). Token lists are identical to
-    # the original normalize_text_col path for every input, including
-    # all-whitespace and empty docs (both degenerate to one ''
-    # shingle via the short-doc branch below). normalize_text_col
-    # itself is untouched (fingerprints/content keys depend on its
-    # string).
-    toks = F.array_remove(F.split(F.lower(t), r"\s+"), "")
+    return F.array_remove(F.split(F.lower(t), r"\s+"), "")
+
+
+def word_shingles(toks: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of a token array: sliding windows
+    via transform(sequence(...)) -> concat_ws -> array_distinct.
+    Documents shorter than n tokens yield their full token string as
+    the single shingle (so they can still match exact copies of
+    themselves); empty, all-whitespace and NULL text all degenerate to
+    one '' shingle.
+
+    Tokenize-once contract: ``toks`` must be a column REFERENCE to a
+    token array projected in an earlier ``select`` (see ``tokenize``),
+    never the tokenizer expression itself. The window lambda reads
+    ``toks`` once per window, and Spark shares no subexpression across
+    a lambda boundary: handed the expression, every window re-runs
+    lower() and the regex split of the whole document, which makes
+    shingling O(words^2) per document. Handed a column, the split runs
+    once per document and Catalyst's CollapseProject keeps the two
+    projections apart, because the windows reference the token column
+    twice (size and slice) and split is not a cheap expression."""
     k = F.size(toks)
     windows = F.transform(
         F.sequence(F.lit(1), F.greatest(k - (n - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
     )
     return F.array_distinct(windows)
+
+
+def shingles_col(text: Column | str, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the text: ``word_shingles``
+    over ``tokens_col``, for ad-hoc single-expression use.
+
+    Quadratic in words per document: the composition puts the
+    tokenizer inside the window lambda, where it re-runs once per
+    window. Shingling is linear only when ``word_shingles`` is given a
+    column reference to staged tokens, so corpus-scale callers use
+    ``tokenize`` and then ``word_shingles(F.col(TOKS), n)``."""
+    return word_shingles(tokens_col(text), n)
+
+
+def tokenize(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
+    """Project ``keep`` plus the token array of ``text_col`` as
+    ``TOKS`` — the first of the two projections every corpus-scale
+    shingling site uses (``word_shingles`` explains why the windows
+    must read the tokens from a column)."""
+    return df.select(*keep, tokens_col(text_col).alias(TOKS))
 
 
 def exact_dedup(
@@ -156,182 +193,31 @@ def hashed_shingles_col(text_col: Column | str, n: int) -> Column:
     canonical shingle representation shared by the posting index, the
     shuffle-free size projection, and the candidate verify. Keeping a
     single definition guarantees those three paths count the same
-    sets (collisions at 2^-64 per pair accepted)."""
-    return F.array_distinct(
-        F.transform(shingles_col(text_col, n), lambda s: F.xxhash64(s))
-    )
+    sets (collisions at 2^-64 per pair accepted). Single-expression
+    form; ``shingle_arrays`` is the tokenize-once corpus form."""
+    return _hash_shingles(shingles_col(text_col, n))
 
 
-#: Round-14 optimization (guide §4.2, judge r13 #3): build the hashed
-#: shingle arrays in ONE vectorized Arrow kernel instead of the JVM
-#: expression chain. The expression path (split -> transform windows
-#: -> concat_ws -> array_distinct -> xxhash64 -> array_distinct) was
-#: the dominant executor-time stage of BOTH dedup_ngram_jaccard and
-#: dedup_minhash_lsh (~6-9 s of the ~13 s total at sf0.1): it
-#: materializes every shingle as a JVM string before hashing it. The
-#: kernel tokenizes with the SAME semantics (utf8_lower + split on
-#: Java-\s [ \t\n\x0b\f\r]+ + drop empty edge tokens), hashes UNIQUE
-#: tokens once per batch (dictionary-encode + vectorized 64-bit
-#: SipHash via pd.util.hash_array — fixed key, deterministic across
-#: workers/runs), and combines the n consecutive token hashes per
-#: window with chained SplitMix64 — no shingle string is ever built.
-#:
-#: Hash-VALUE contract: the kernel's 64-bit shingle ids differ from
-#: the old xxhash64(string) ids, but every consumer is internal to
-#: ``shingle_arrays`` frames (posting joins, array intersects, the
-#: MinHash signature kernel) — nothing joins these ids against an
-#: expression-computed shingle hash, and no declared output carries
-#: them. What downstream results depend on is only SET structure
-#: (sizes / intersections / equality of per-doc shingle sets), which
-#: is injective-modulo-64-bit-collision in both families — the same
-#: accepted 2^-64-per-pair class xxhash64 already carried.
-#:
-#: MEASURED AND REJECTED as the default at bench scale (round 14):
-#: same-session A/B on sf0.1 dedup_ngram_jaccard, 32 cores, stage
-#: executor-time totals — expression path ~13.4-14.4 s/rep vs kernel
-#: ~16.2-16.8 s/rep (wall 1.11-1.20 vs 1.17-1.25 s), with final pairs
-#: bit-identical. The kernel's numpy work is ~ms; the loss is the
-#: ~190-230 ms FIXED per-Python-task protocol latency measured on
-#: this host (an IDENTITY mapInArrow over 32 tasks of 156 rows costs
-#: 7.3 s executor time, workers verified reused) — at 156 docs/task
-#: the boundary overhead exceeds the JVM expression work it replaces.
-#: The kernel wins only when partitions carry enough documents to
-#: amortize that latency (guide §4.2 batch-size caveat), so it stays
-#: selectable for genuinely large per-task batches and parity-tested,
-#: but the JVM expression path remains the default.
-SHINGLE_KERNEL = False
-
-#: token-window chaining seed for the kernel (any fixed odd constant;
-#: pinned so signatures are reproducible across sessions)
-_SHINGLE_SEED = np.uint64(0x9E3779B97F4A7C15)
+def _hash_shingles(shingles: Column) -> Column:
+    return F.array_distinct(F.transform(shingles, lambda s: F.xxhash64(s)))
 
 
-def _shingle_kernel_batches(iterator, n: int, id_field):
-    """mapInArrow body for the kernel ``shingle_arrays`` path: yields
-    (id, __arr list<int64>) — per-doc DISTINCT window hashes, with the
-    short-doc (k < n) degenerate mapped to ONE hash of the space-joined
-    token string (mirroring the expression path's single-shingle
-    branch; tokens carry no whitespace, so the joined string cannot
-    systematically collide with another doc's token)."""
-    import pyarrow as pa  # noqa: PLC0415
-    import pyarrow.compute as pc  # noqa: PLC0415
-
-    out_schema = pa.schema([id_field, pa.field("__arr", pa.list_(pa.int64()))])
-    for batch in iterator:
-        ids = batch.column(0)
-        ndocs = len(ids)
-        if ndocs == 0:
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array([], type=pa.list_(pa.int64()))],
-                schema=out_schema,
-            )
-            continue
-        txt = pc.fill_null(pc.cast(batch.column(1), pa.string()), "")
-        toks = pc.split_pattern_regex(
-            pc.utf8_lower(txt), pattern=r"[ \t\n\x0b\f\r]+"
-        )
-        flat = pc.list_flatten(toks)
-        counts = pc.list_value_length(toks).to_numpy(zero_copy_only=False)
-        doc_idx = np.repeat(np.arange(ndocs, dtype=np.int64), counts)
-        keep = pc.not_equal(flat, "")
-        flat = flat.filter(keep)
-        doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
-        # unique-token hashing: dictionary-encode (C), hash only the
-        # dictionary (vectorized SipHash, fixed key), then gather
-        enc = flat.combine_chunks().dictionary_encode() if isinstance(
-            flat, pa.ChunkedArray
-        ) else flat.dictionary_encode()
-        uniq = enc.dictionary.to_pandas().to_numpy(dtype=object)
-        uh = (
-            pd.util.hash_array(uniq)
-            if len(uniq)
-            else np.empty(0, dtype=np.uint64)
-        )
-        th = uh[enc.indices.to_numpy(zero_copy_only=False)]
-        kcounts = np.bincount(doc_idx, minlength=ndocs).astype(np.int64)
-
-        # window hashes for docs with k >= n: chained SplitMix64 over
-        # n consecutive token hashes on the FLAT array; windows that
-        # straddle a doc boundary (or belong to short docs) are masked
-        nt = len(th)
-        if nt >= n:
-            ln = nt - n + 1
-            z = th[:ln] ^ _SHINGLE_SEED
-            z = _splitmix64(z.copy() if z.base is not None else z)
-            for j in range(1, n):
-                z ^= th[j : j + ln]
-                z = _splitmix64(z)
-            valid = doc_idx[:ln] == doc_idx[n - 1 :]
-            wh = z[valid]
-            wd = doc_idx[:ln][valid]
-        else:
-            wh = np.empty(0, dtype=np.uint64)
-            wd = np.empty(0, dtype=np.int64)
-        # per-doc distinct (order within a doc is irrelevant to every
-        # consumer — sets only)
-        if len(wh):
-            order = np.lexsort((wh, wd))
-            wd, wh = wd[order], wh[order]
-            first = np.ones(len(wh), dtype=bool)
-            first[1:] = (wd[1:] != wd[:-1]) | (wh[1:] != wh[:-1])
-            wd, wh = wd[first], wh[first]
-
-        # short docs (k < n, incl. empty/NULL text): one hash of the
-        # space-joined token string via the same token-hash family
-        short = np.flatnonzero(kcounts < n)
-        if len(short):
-            offs = np.zeros(ndocs + 1, dtype=np.int64)
-            np.cumsum(kcounts, out=offs[1:])
-            kept_list = pa.ListArray.from_arrays(
-                pa.array(offs, type=pa.int64()).cast(pa.int32()),
-                flat.combine_chunks()
-                if isinstance(flat, pa.ChunkedArray)
-                else flat,
-            )
-            joined = pc.binary_join(kept_list.take(pa.array(short)), " ")
-            sh = pd.util.hash_array(
-                joined.to_pandas().to_numpy(dtype=object)
-            )
-            all_d = np.concatenate([wd, short])
-            all_v = np.concatenate([wh, sh])
-            order = np.argsort(all_d, kind="stable")
-            all_d, all_v = all_d[order], all_v[order]
-        else:
-            all_d, all_v = wd, wh
-
-        out_counts = np.bincount(all_d, minlength=ndocs)
-        out_offs = np.zeros(ndocs + 1, dtype=np.int64)
-        np.cumsum(out_counts, out=out_offs[1:])
-        arr = pa.ListArray.from_arrays(
-            pa.array(out_offs, type=pa.int64()).cast(pa.int32()),
-            pa.array(all_v.view(np.int64), type=pa.int64()),
-        )
-        yield pa.RecordBatch.from_arrays([ids, arr], schema=out_schema)
-
-
-def _shingle_arrays_kernel(
-    df: DataFrame, id_col: str, text_col: str, n: int
-) -> DataFrame:
-    """Kernel form of the (id, __arr) shingle projection — see the
-    SHINGLE_KERNEL note above. Projects to exactly two columns before
-    the Python boundary (guide §4.1: opaque functions defeat column
-    pruning)."""
-    import pyarrow as pa  # noqa: PLC0415
-
-    src = fan_out(df).select(F.col(id_col), F.col(text_col))
-    id_type = dict(df.dtypes)[id_col]
-    id_field = pa.field(id_col, pa.int64() if id_type == "bigint" else None)
-    if id_field.type is None:  # non-long ids: fall back to expressions
-        return fan_out(df).select(
-            F.col(id_col), hashed_shingles_col(text_col, n).alias("__arr")
-        )
-
-    def _body(it):
-        return _shingle_kernel_batches(it, n, id_field)
-
-    return src.mapInArrow(
-        _body, schema=f"{id_col} long, __arr array<long>"
-    )
+# Why the shingle projection was slow, and why it is not an Arrow
+# kernel. Through round 14 the expression path (split -> transform
+# windows -> concat_ws -> array_distinct -> xxhash64 -> array_distinct)
+# was the dominant executor-time stage of both dedup_ngram_jaccard and
+# dedup_minhash_lsh. Round 14 blamed building every shingle as a JVM
+# string and added an opt-in mapInArrow kernel that hashed tokens
+# instead; it lost its A/B to per-Python-task latency and stayed off.
+# The real cost was elsewhere: the window lambda closed over the
+# tokenizer expression, so lower() and the regex split of the whole
+# document re-ran for every window — O(words^2) per document. With
+# the tokens staged as a column (``tokenize`` + ``word_shingles``)
+# the expression path is linear, and the kernel lost again by 5x
+# (sf0.1 documents, 4-vCPU host, local[32], warm medians of 5: shingle
+# projection 0.41 s expression vs 2.22 s kernel; dedup_ngram_jaccard
+# 1.50 vs 3.08 s; dedup_minhash_lsh 2.70 vs 4.46 s, same pairs), so it
+# was deleted.
 
 
 def shingle_arrays(
@@ -369,12 +255,10 @@ def shingle_arrays(
     (both branches stay lossless/result-identical — only the probe
     cost and plan optimality are at stake). Pass an explicit mode to
     keep construction job-free."""
-    if SHINGLE_KERNEL:
-        arrays = _shingle_arrays_kernel(df, id_col, text_col, n)
-    else:
-        arrays = fan_out(df).select(
-            F.col(id_col), hashed_shingles_col(text_col, n).alias("__arr")
-        )
+    arrays = tokenize(fan_out(df), text_col, id_col).select(
+        F.col(id_col),
+        _hash_shingles(word_shingles(F.col(TOKS), n)).alias("__arr"),
+    )
     return arrays.localCheckpoint(eager=False) if materialize else arrays
 
 

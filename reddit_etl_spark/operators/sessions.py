@@ -522,10 +522,16 @@ def session_transitions(
         F.array_sort(F.collect_list(step)), lambda x: x["__et"]
     )
     per = sess.groupBy(*keys, "session_id").agg(types.alias("__types"))
-    padded = F.concat(
-        F.array(F.lit(start_state)), F.col("__types"), F.array(F.lit(end_state))
-    )
+    padded = F.col("__padded")
+    # padded array as its own column: the pair lambda reads it twice per
+    # element, and an inlined concat would rebuild it per element
     pairs = per.select(
+        F.concat(
+            F.array(F.lit(start_state)),
+            F.col("__types"),
+            F.array(F.lit(end_state)),
+        ).alias("__padded")
+    ).select(
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.size(padded) - 2),

@@ -137,10 +137,13 @@ def winnowing_fingerprints_col(
     rare across unrelated documents — short grams (e.g. 8 chars of
     common English) turn every fingerprint into a hot join key.
 
-    NOTE: single-expression form, quadratic in document length (the
-    gram subexpression re-evaluates inside the window lambda) — fine
-    for short strings/tests; corpus-scale callers use the pipeline
-    form ``winnowing_fingerprints`` which materializes grams once.
+    NOTE: single-expression form, cubic in document length: Spark
+    shares no subexpression across a lambda boundary, so the normalize
+    regex re-runs for every gram and the whole gram array re-runs for
+    every window. Fine for short strings and tests;
+    corpus-scale callers use the pipeline form
+    ``winnowing_fingerprints``, which stages the normalized text and
+    the gram array as columns and is linear.
     """
     t = normalize_text_col(text)
     n_grams = F.greatest(F.length(t) - (k - 1), F.lit(1))
@@ -170,11 +173,13 @@ def winnowing_fingerprints(
 ) -> DataFrame:
     """(id, fingerprint) posting rows — the pipeline form.
 
-    Two selects, NOT one nested expression: the gram array must
-    materialize as a real column first, because a lambda that closes
-    over a subexpression re-evaluates it per element (no CSE across
-    lambda boundaries) — inlined, window-min goes quadratic in
-    document length.
+    Three selects, NOT one nested expression: the normalized text and
+    then the gram array must each be a real column before a lambda
+    reads them, because a lambda that closes over a subexpression
+    re-evaluates it per element (no CSE across lambda boundaries) —
+    inlined, the normalize regex re-runs per gram and window-min goes
+    quadratic in document length. CollapseProject keeps the stages
+    apart: each staged column is non-cheap and referenced twice.
 
     ``hash_fn='md5_60'`` uses an engine-portable gram hash (see
     ``dedup.token_hash_col``) so the full winnowing pipeline — grams,
@@ -183,9 +188,11 @@ def winnowing_fingerprints(
     from .dedup import token_hash_col  # noqa: PLC0415
     from .util import fan_out  # noqa: PLC0415
 
-    t = normalize_text_col(text_col)
+    t = F.col("__t")
     n_grams = F.greatest(F.length(t) - (k - 1), F.lit(1))
     grams = fan_out(df).select(
+        F.col(id_col), normalize_text_col(text_col).alias("__t")
+    ).select(
         F.col(id_col),
         F.transform(
             F.sequence(F.lit(1), n_grams),
@@ -270,7 +277,7 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _all_word_grams(toks: Column, n: int) -> Column:
     """All word n-grams of a token array, duplicates KEPT (repetition
-    statistics need instance counts; dedup's ``shingles_col`` is the
+    statistics need instance counts; dedup's ``word_shingles`` is the
     distinct variant). Documents shorter than n tokens yield one
     truncated gram so ratios stay defined."""
     return F.transform(
@@ -695,7 +702,9 @@ def chunk_documents(
             f"overlap ({overlap}) must be < chunk_tokens ({chunk_tokens})"
         )
     stride = chunk_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    # tokens as their own column: the chunk lambda reads them once per
+    # chunk, and an inlined split would re-run per chunk
+    toks = F.col("__toks")
     n = F.size(toks)
     # number of stride-steps needed so the last window reaches the end
     n_chunks = F.greatest(
@@ -709,7 +718,11 @@ def chunk_documents(
         ),
     )
     return (
-        df.select(F.col(id_col), F.posexplode(chunks).alias("chunk_id", "chunk_text"))
+        df.select(
+            F.col(id_col),
+            F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
+        )
+        .select(F.col(id_col), F.posexplode(chunks).alias("chunk_id", "chunk_text"))
         .withColumn(
             "chunk_token_count",
             F.size(F.split(F.col("chunk_text"), r"\s+")).cast("long"),
@@ -1758,7 +1771,9 @@ def char_entropy(
 
     Returns (id, n_chars BIGINT, distinct_chars BIGINT, entropy_nats).
     """
-    t = normalize_text_col(text_col)
+    # normalized text as its own column: the character lambda reads it
+    # once per character, and an inlined regex would re-run per character
+    t = F.col("__t")
     chars = F.explode(
         F.transform(
             F.sequence(F.lit(1), F.length(t)),
@@ -1766,7 +1781,8 @@ def char_entropy(
         )
     )
     cells = (
-        df.filter(F.length(t) > 0)
+        df.select(F.col(id_col), normalize_text_col(text_col).alias("__t"))
+        .filter(F.length(t) > 0)
         .select(F.col(id_col), chars.alias("__ch"))
         .groupBy(id_col, "__ch")
         .agg(F.count("*").cast("long").alias("__c"))

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -14,6 +16,34 @@ from pyspark.sql import DataFrame
 #: (``inputFiles() == ()``) are never memoized — their partitioning
 #: is not file-derived.
 _FANOUT_MEMO: dict = {}
+
+#: logical-plan node classes whose presence makes a frame not
+#: scan-narrow: anything that shuffles or changes the partition
+#: count. Matched as substrings of plan-node names only (so
+#: ``Aggregate`` also covers ``AggregateInPandas`` and ``Join`` covers
+#: ``AsOfJoin``), never of the plan text, where a column named
+#: ``JoinKey`` used to disqualify a plain scan.
+_WIDE_NODES = (
+    "Repartition", "RebalancePartitions", "Join", "Aggregate", "Window",
+    "Sort", "Deduplicate", "Distinct", "GlobalLimit", "Intersect",
+    "Except", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+    "CoGroup",
+)
+
+
+#: the node name that starts each line of a plan's tree string (after
+#: the ``:- ``/``+- `` drawing); expressions and column names never
+#: start a line
+_NODE_RX = re.compile(r"^[\s:|+\-]*(\w+)", re.MULTILINE)
+
+
+def _plan_node_names(df: DataFrame) -> list[str]:
+    """Names of the nodes of the analyzed logical plan, read from ONE
+    py4j ``toString`` round-trip (analyzed, so REPARTITION/REBALANCE
+    hints appear as nodes). ``toJSON`` would name the classes too, but
+    it serializes a ``LocalRelation``'s rows: ~450 KB and ~120 ms for
+    one incremental-MinHash frame, against a few KB for the tree."""
+    return _NODE_RX.findall(df._jdf.queryExecution().analyzed().toString())
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -32,17 +62,11 @@ def fan_out(df: DataFrame) -> DataFrame:
         # the file-set key alone also matched post-shuffle frames
         # over the same files, where a memoized under-parallel count
         # would coalesce a WIDE frame down to defaultParallelism —
-        # a full extra shuffle, not a redundant tiny one). One py4j
-        # round-trip reads the unanalyzed plan text; any
+        # a full extra shuffle, not a redundant tiny one). Any
         # shuffle-inducing node disqualifies both memo store and
         # memo hit, falling through to the live probe.
-        plan = df._jdf.queryExecution().logical().toString()
         scan_narrow = not any(
-            t in plan
-            for t in (
-                "Repartition", "Join", "Aggregate", "Window", "Sort",
-                "Deduplicate", "Distinct", "GlobalLimit",
-            )
+            w in c for c in _plan_node_names(df) for w in _WIDE_NODES
         )
         files = df.inputFiles() if scan_narrow else ()
         if files:

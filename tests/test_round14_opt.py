@@ -96,11 +96,9 @@ def _brute_jaccard_pairs(docs, n=3, threshold=0.5):
     return sorted(out)
 
 
-def test_ngram_jaccard_size_filter_and_kernel_parity(spark):
-    """The round-14 size-compatibility join prefilter is lossless, and
-    the Arrow shingle kernel (SHINGLE_KERNEL=True) produces identical
-    final pairs to the expression path — both checked against a
-    brute-force Python reference."""
+def test_ngram_jaccard_size_filter(spark):
+    """The round-14 size-compatibility join prefilter is lossless:
+    final pairs equal a brute-force Python reference."""
     import reddit_etl_spark.operators.dedup as dd
 
     docs = [
@@ -114,61 +112,13 @@ def test_ngram_jaccard_size_filter_and_kernel_parity(spark):
         (8, "x " * 30 + "alpha beta gamma"),           # size-incompatible overlap
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    expect = _brute_jaccard_pairs(docs)
-    saved = dd.SHINGLE_KERNEL
-    try:
-        for kernel in (False, True):
-            dd.SHINGLE_KERNEL = kernel
-            got = sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in dd.ngram_jaccard_pairs(
-                    df, "doc_id", "text", n=3, threshold=0.5
-                ).collect()
-            )
-            assert got == expect, f"kernel={kernel}"
-    finally:
-        dd.SHINGLE_KERNEL = saved
-
-
-def test_shingle_kernel_set_structure_matches_expressions(spark):
-    """Kernel and expression shingle arrays use different 64-bit hash
-    families; what every consumer depends on is per-doc set SIZE and
-    pairwise INTERSECTION structure — assert those are identical."""
-    import itertools
-
-    import reddit_etl_spark.operators.dedup as dd
-
-    docs = [
-        (1, "hello world foo bar\n"),
-        (2, "\thello world foo bar"),
-        (3, "hello   world\tfoo bar"),
-        (4, "one"),
-        (5, "one two"),
-        (6, ""),
-        (7, None),
-        (8, "  \n "),
-        (9, "a b c d e f g a b c d e f g"),
-        (10, "x y z"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    def sets(kernel):
-        saved = dd.SHINGLE_KERNEL
-        dd.SHINGLE_KERNEL = kernel
-        try:
-            rows = dd.shingle_arrays(
-                df, "doc_id", "text", 3, materialize=False
-            ).collect()
-        finally:
-            dd.SHINGLE_KERNEL = saved
-        return {r["doc_id"]: frozenset(r["__arr"]) for r in rows}
-
-    k, e = sets(True), sets(False)
-    assert set(k) == set(e)
-    for d in k:
-        assert len(k[d]) == len(e[d]), d
-    for a, b in itertools.combinations(sorted(k), 2):
-        assert len(k[a] & k[b]) == len(e[a] & e[b]), (a, b)
+    got = sorted(
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in dd.ngram_jaccard_pairs(
+            df, "doc_id", "text", n=3, threshold=0.5
+        ).collect()
+    )
+    assert got == _brute_jaccard_pairs(docs)
 
 
 def test_hoeffding_lane_parity(spark):
@@ -339,6 +289,63 @@ def test_fan_out_memo_scan_narrow_only(spark, tmp_path):
     u.fan_out(agg)
     assert len(u._FANOUT_MEMO) == 1  # post-agg frame never keyed
     u._FANOUT_MEMO.clear()
+
+
+def test_fan_out_memo_ignores_column_names(spark, tmp_path):
+    """ADVICE r14: the memo gate matched substrings of the plan TEXT,
+    so a scan with a column named ``JoinKey`` never reached the memo.
+    It now reads plan-node class names."""
+    import reddit_etl_spark.operators.util as u
+
+    p = str(tmp_path / "jk.parquet")
+    spark.range(0, 100).withColumnRenamed("id", "JoinKey").coalesce(1).write.parquet(p)
+    u._FANOUT_MEMO.clear()
+    try:
+        u.fan_out(spark.read.parquet(p))
+        assert len(u._FANOUT_MEMO) == 1  # narrow scan memoized
+        # poison the entry: a memo hit now skips the fan-out that the
+        # live probe (one partition) would add
+        u._FANOUT_MEMO[next(iter(u._FANOUT_MEMO))] = 10**6
+        again = spark.read.parquet(p).select("JoinKey")
+        assert u.fan_out(again) is again
+    finally:
+        u._FANOUT_MEMO.clear()
+
+
+def test_fan_out_memo_skips_set_ops_and_pandas_groups(spark, tmp_path):
+    """An intersect (or except, pandas group map, rebalance) over the
+    same files is not scan-narrow: it neither stores nor hits."""
+    import reddit_etl_spark.operators.util as u
+
+    p = str(tmp_path / "one.parquet")
+    spark.range(0, 100).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+    wide = [
+        df.intersect(df),
+        df.exceptAll(df),
+        df.groupBy("id").applyInPandas(lambda g: g, "id long"),
+        df.hint("rebalance"),
+    ]
+    class Spy(dict):
+        def get(self, key, default=None):
+            reads.append(key)
+            return super().get(key, default)
+
+    reads: list = []
+    saved = u._FANOUT_MEMO
+    u._FANOUT_MEMO = Spy()
+    try:
+        for w in wide:
+            u.fan_out(w)
+        assert u._FANOUT_MEMO == {}  # no store
+        assert reads == []  # no read
+        u.fan_out(df)
+        assert len(u._FANOUT_MEMO) == 1
+        for w in wide:
+            u.fan_out(w)
+        assert len(reads) == 1  # only the narrow scan read it
+    finally:
+        u._FANOUT_MEMO = saved
 
 
 def test_deming_floor_micros_on_exact_boundary(spark):
