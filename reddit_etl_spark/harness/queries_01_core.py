@@ -2552,17 +2552,15 @@ def cross_source_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     "redaction is what production pipelines actually ship)",
 )
 def sentence_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import TOKS, tokenize, word_shingles
+    from ..operators.dedup import shingle_frame
     from ..operators.text import split_sentences
     from ..operators.util import fan_out
 
     docs = load(spark, sf_dir, "documents")
     sents = split_sentences(docs, "doc_id", "text")
-    grams = tokenize(fan_out(sents), "sentence", "doc_id", "sentence_idx").select(
-        "doc_id",
-        "sentence_idx",
-        F.explode(word_shingles(F.col(TOKS), 5)).alias("g"),
-    )
+    grams = shingle_frame(
+        fan_out(sents), "sentence", 5, "doc_id", "sentence_idx", explode=True
+    ).withColumnRenamed("__gram", "g")
     bench = grams.filter(F.col("doc_id") % 23 == 0).select("g").distinct()
     return (
         grams.filter(F.col("doc_id") % 23 != 0)

@@ -130,17 +130,13 @@ def decontaminate(
     map-side hash-join probe: no shuffle of corpus data at all. If the
     benchmark outgrows broadcast size, drop the hint and the same plan
     becomes a shuffle join on the gram key."""
-    from .dedup import TOKS, tokenize, word_shingles
+    from .dedup import shingle_frame
     from .util import fan_out
 
     # fan_out BEFORE shingling: a single-row-group input would otherwise
     # run the CPU-heavy gram expansion on one core (see dedup.py)
-    doc_grams = tokenize(fan_out(docs), text_col, id_col).select(
-        F.col(id_col), F.explode(word_shingles(F.col(TOKS), n)).alias("__gram")
-    )
-    bench_grams = tokenize(benchmark, text_col).select(
-        F.explode(word_shingles(F.col(TOKS), n)).alias("__gram")
-    ).distinct()
+    doc_grams = shingle_frame(fan_out(docs), text_col, n, id_col, explode=True)
+    bench_grams = shingle_frame(benchmark, text_col, n, explode=True).distinct()
     return (
         doc_grams.join(F.broadcast(bench_grams), "__gram")
         .groupBy(id_col)
@@ -268,15 +264,14 @@ def decontaminate_bloom(
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    from .dedup import TOKS, tokenize, word_shingles
+    from .dedup import shingle_frame
     from .util import fan_out
 
     bench_hashes = np.array(
         [
             r[0]
-            for r in tokenize(benchmark, text_col)
-            .select(F.explode(word_shingles(F.col(TOKS), n)).alias("__g"))
-            .select(F.xxhash64("__g").alias("__h"))
+            for r in shingle_frame(benchmark, text_col, n, explode=True)
+            .select(F.xxhash64("__gram").alias("__h"))
             .distinct()
             .collect()
         ],
@@ -327,11 +322,9 @@ def decontaminate_bloom(
     # into the window lambda, and the projection then ran it again
     bloom_hits = bloom_hits.asNondeterministic()
 
-    hashed = tokenize(fan_out(docs), text_col, id_col).select(
+    hashed = shingle_frame(fan_out(docs), text_col, n, id_col).select(
         F.col(id_col),
-        F.transform(
-            word_shingles(F.col(TOKS), n), lambda g: F.xxhash64(g)
-        ).alias("__gh"),
+        F.transform("__grams", lambda g: F.xxhash64(g)).alias("__gh"),
     )
     return (
         hashed.select(
@@ -350,7 +343,7 @@ def boilerplate_grams(
 ) -> DataFrame:
     """Corpus-level boilerplate n-grams: distinct word n-grams that
     occur in at least ``min_docs`` distinct documents (navigation
-    chrome, license headers, template text). Because ``word_shingles``
+    chrome, license headers, template text). Because ``shingle_frame``
     is already distinct-per-document, ``COUNT(*)`` after the explode IS
     the document frequency — no countDistinct expansion needed.
 
@@ -358,14 +351,12 @@ def boilerplate_grams(
     carries at most |distinct grams per partition| rows. The result is
     tiny relative to the corpus (boilerplate is by definition shared),
     so downstream consumers broadcast it."""
-    from .dedup import TOKS, tokenize, word_shingles
+    from .dedup import shingle_frame
     from .util import fan_out
 
-    grams = tokenize(fan_out(docs), text_col).select(
-        F.explode(word_shingles(F.col(TOKS), n)).alias("gram")
-    )
+    grams = shingle_frame(fan_out(docs), text_col, n, explode=True)
     return (
-        grams.groupBy("gram")
+        grams.groupBy(F.col("__gram").alias("gram"))
         .agg(F.count("*").cast("long").alias("doc_freq"))
         .filter(F.col("doc_freq") >= min_docs)
     )
@@ -387,35 +378,22 @@ def boilerplate_fraction(
     at 100 TB the first pass's output is persisted once and the probe
     is a broadcast hash join against the scan, so no corpus data is
     ever shuffled in the probe pass."""
-    from .dedup import TOKS, tokenize, word_shingles
+    from .dedup import shingle_frame
     from .util import fan_out
 
     bp = boilerplate_grams(docs, id_col, text_col, n, min_docs).select(
-        "gram", F.lit(1).alias("__bp")
+        F.col("gram").alias("__gram"), F.lit(1).alias("__bp")
     )
-    # project the gram array ONCE: Catalyst does not CSE the heavy
-    # shingle expression across size() and explode(), and evaluating
-    # it twice per document doubles the probe pass's CPU. explode_outer
-    # because an inner explode of a column makes the optimizer infer
-    # size(__grams) > 0 and push that filter below both projections,
-    # inlining the tokenizer into the window lambda again; the rows are
-    # the same, since word_shingles never returns an empty or NULL array
-    doc_grams = (
-        tokenize(fan_out(docs), text_col, id_col)
-        .select(
-            F.col(id_col), word_shingles(F.col(TOKS), n).alias("__grams")
-        )
-        .select(
-            F.col(id_col),
-            F.size("__grams").cast("long").alias("__n_grams"),
-            F.explode_outer("__grams").alias("gram"),
-        )
-    )
+    # one row per distinct gram of each document (never zero rows: an
+    # empty or NULL text yields the single '' gram), so the per-doc row
+    # count IS the gram count; bp is unique per gram, so the left join
+    # keeps every row exactly once
+    doc_grams = shingle_frame(fan_out(docs), text_col, n, id_col, explode=True)
     return (
-        doc_grams.join(F.broadcast(bp), "gram", "left")
+        doc_grams.join(F.broadcast(bp), "__gram", "left")
         .groupBy(id_col)
         .agg(
-            F.first("__n_grams").alias("n_grams"),
+            F.count("*").alias("n_grams"),
             F.coalesce(F.sum("__bp"), F.lit(0)).cast("long").alias("n_boilerplate"),
         )
         .withColumn(

@@ -67,11 +67,7 @@ def _splitmix64(z: np.ndarray) -> np.ndarray:
     return z
 
 
-#: name of the staged token-array column (``tokenize``)
-TOKS = "__toks"
-
-
-def tokens_col(text: Column | str) -> Column:
+def _tokens(text: Column | str) -> Column:
     """THE shingle tokenizer: lowercase, split on maximal whitespace
     runs, drop the empty edge tokens.
 
@@ -92,24 +88,13 @@ def tokens_col(text: Column | str) -> Column:
     return F.array_remove(F.split(F.lower(t), r"\s+"), "")
 
 
-def word_shingles(toks: Column, n: int = 3) -> Column:
+def _word_shingles(toks: Column, n: int) -> Column:
     """Distinct word n-gram shingles of a token array: sliding windows
     via transform(sequence(...)) -> concat_ws -> array_distinct.
     Documents shorter than n tokens yield their full token string as
     the single shingle (so they can still match exact copies of
     themselves); empty, all-whitespace and NULL text all degenerate to
-    one '' shingle.
-
-    Tokenize-once contract: ``toks`` must be a column REFERENCE to a
-    token array projected in an earlier ``select`` (see ``tokenize``),
-    never the tokenizer expression itself. The window lambda reads
-    ``toks`` once per window, and Spark shares no subexpression across
-    a lambda boundary: handed the expression, every window re-runs
-    lower() and the regex split of the whole document, which makes
-    shingling O(words^2) per document. Handed a column, the split runs
-    once per document and Catalyst's CollapseProject keeps the two
-    projections apart, because the windows reference the token column
-    twice (size and slice) and split is not a cheap expression."""
+    one '' shingle, so the array is never empty or NULL."""
     k = F.size(toks)
     windows = F.transform(
         F.sequence(F.lit(1), F.greatest(k - (n - 1), F.lit(1))),
@@ -119,23 +104,39 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
 
 
 def shingles_col(text: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the text: ``word_shingles``
-    over ``tokens_col``, for ad-hoc single-expression use.
+    """Distinct word n-gram shingles of the text as ONE expression, for
+    ad-hoc use on small frames.
 
-    Quadratic in words per document: the composition puts the
-    tokenizer inside the window lambda, where it re-runs once per
-    window. Shingling is linear only when ``word_shingles`` is given a
-    column reference to staged tokens, so corpus-scale callers use
-    ``tokenize`` and then ``word_shingles(F.col(TOKS), n)``."""
-    return word_shingles(tokens_col(text), n)
+    Quadratic in words per document: the window lambda reads the
+    token array once per window, and Spark shares no subexpression
+    across a lambda boundary, so lower() and the regex split of the
+    whole document re-run for every window. Corpus-scale callers use
+    ``shingle_frame``, which is linear and returns the same
+    shingles."""
+    return _word_shingles(_tokens(text), n)
 
 
-def tokenize(df: DataFrame, text_col: str, *keep: str) -> DataFrame:
-    """Project ``keep`` plus the token array of ``text_col`` as
-    ``TOKS`` — the first of the two projections every corpus-scale
-    shingling site uses (``word_shingles`` explains why the windows
-    must read the tokens from a column)."""
-    return df.select(*keep, tokens_col(text_col).alias(TOKS))
+def shingle_frame(
+    df: DataFrame, text_col: str, n: int, *keep: str, explode: bool = False
+) -> DataFrame:
+    """``keep`` plus the distinct word n-gram shingles of ``text_col``
+    (``shingles_col``'s shingles): one ``__grams`` array per row, or
+    with ``explode=True`` one row per shingle in ``__gram``.
+
+    Tokenize once: the token array is projected as its own column
+    first, and the windows read that column. The split then runs once
+    per document, and Catalyst's CollapseProject keeps the two
+    projections apart, because the windows reference the token column
+    twice (size and slice) and split is not a cheap expression.
+    ``explode=True`` explodes the shingle expression, not a column:
+    an inner explode of a column makes the optimizer infer
+    ``size(col) > 0`` and push that filter below both projections,
+    which inlines the tokenizer into the window lambda again."""
+    toks = df.select(*keep, _tokens(text_col).alias("__toks"))
+    grams = _word_shingles(F.col("__toks"), n)
+    if explode:
+        return toks.select(*keep, F.explode(grams).alias("__gram"))
+    return toks.select(*keep, grams.alias("__grams"))
 
 
 def exact_dedup(
@@ -189,12 +190,11 @@ def exact_dedup(
 
 
 def hashed_shingles_col(text_col: Column | str, n: int) -> Column:
-    """Distinct 64-bit hashes of the word-n-gram shingles — THE
-    canonical shingle representation shared by the posting index, the
-    shuffle-free size projection, and the candidate verify. Keeping a
-    single definition guarantees those three paths count the same
-    sets (collisions at 2^-64 per pair accepted). Single-expression
-    form; ``shingle_arrays`` is the tokenize-once corpus form."""
+    """Distinct 64-bit hashes of the word-n-gram shingles, as one
+    expression: the reference form of ``shingle_arrays``' ``__arr``
+    (same hashes), kept for tests and ad-hoc use on small frames. It
+    is quadratic in words per document for ``shingles_col``'s reason;
+    ``shingle_arrays`` is the one corpus path."""
     return _hash_shingles(shingles_col(text_col, n))
 
 
@@ -212,8 +212,8 @@ def _hash_shingles(shingles: Column) -> Column:
 # The real cost was elsewhere: the window lambda closed over the
 # tokenizer expression, so lower() and the regex split of the whole
 # document re-ran for every window — O(words^2) per document. With
-# the tokens staged as a column (``tokenize`` + ``word_shingles``)
-# the expression path is linear, and the kernel lost again by 5x
+# the tokens staged as a column (``shingle_frame``) the expression
+# path is linear, and the kernel lost again by 5x
 # (sf0.1 documents, 4-vCPU host, local[32], warm medians of 5: shingle
 # projection 0.41 s expression vs 2.22 s kernel; dedup_ngram_jaccard
 # 1.50 vs 3.08 s; dedup_minhash_lsh 2.70 vs 4.46 s, same pairs), so it
@@ -255,9 +255,8 @@ def shingle_arrays(
     (both branches stay lossless/result-identical — only the probe
     cost and plan optimality are at stake). Pass an explicit mode to
     keep construction job-free."""
-    arrays = tokenize(fan_out(df), text_col, id_col).select(
-        F.col(id_col),
-        _hash_shingles(word_shingles(F.col(TOKS), n)).alias("__arr"),
+    arrays = shingle_frame(fan_out(df), text_col, n, id_col).select(
+        F.col(id_col), _hash_shingles(F.col("__grams")).alias("__arr")
     )
     return arrays.localCheckpoint(eager=False) if materialize else arrays
 
@@ -269,6 +268,21 @@ def _posting_from_arrays(arrays: DataFrame, id_col: str) -> DataFrame:
     return arrays.select(
         F.col(id_col), F.explode("__arr").alias("__sh")
     )
+
+
+def _by_pair(co: DataFrame) -> DataFrame:
+    """Co-occurrence rows hash-partitioned on (id_a, id_b), so the pair
+    count that follows aggregates only after the shuffle.
+
+    Nearly every pair occurs once per map task (sf0.1: 0.97M Jaccard
+    join rows -> 0.85M pairs), so a partial aggregate before the
+    shuffle saves ~12 % of the rows while holding a hash map of almost
+    all of them in every map task: ~24 MB of execution memory per task
+    next to the shuffle writers' buffers, which made this stage run a
+    1 GB driver with 32 task slots out of heap. Repartitioning by
+    columns (no count) keeps the session's partition count and AQE's
+    coalescing."""
+    return co.repartition("id_a", "id_b")
 
 
 def _verify_pairs_by_counts(
@@ -291,7 +305,9 @@ def _verify_pairs_by_counts(
     left = posting.select(F.col("__sh"), F.col(id_col).alias("id_a"))
     right = posting.select(F.col("__sh"), F.col(id_col).alias("id_b"))
     co = left.join(right, "__sh").filter(F.col("id_a") < F.col("id_b"))
-    common = co.groupBy("id_a", "id_b").agg(F.count("*").alias("__common"))
+    common = _by_pair(co).groupBy("id_a", "id_b").agg(
+        F.count("*").alias("__common")
+    )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("__sz").alias("__sa"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("__sz").alias("__sb"))
     return (
@@ -497,14 +513,15 @@ def ngram_jaccard_pairs(
             # them BEFORE the pair aggregate is lossless. Measured at
             # sf0.1: 1.27M -> 0.97M pair-agg input rows (-24%); at scale
             # the cut grows with doc-size spread.
+            co = left.join(
+                right,
+                (left["__sh"] == right["__sh"])
+                & (F.col("id_a") < F.col("id_b"))
+                & (F.col("__sb") >= threshold * F.col("__sa"))
+                & (F.col("__sa") >= threshold * F.col("__sb")),
+            )
             return (
-                left.join(
-                    right,
-                    (left["__sh"] == right["__sh"])
-                    & (F.col("id_a") < F.col("id_b"))
-                    & (F.col("__sb") >= threshold * F.col("__sa"))
-                    & (F.col("__sa") >= threshold * F.col("__sb")),
-                )
+                _by_pair(co)
                 .groupBy("id_a", "id_b")
                 .agg(
                     F.count("*").alias("__common"),
@@ -619,9 +636,9 @@ def ngram_containment_pairs(
         right = sized.select(
             "__sh", F.col(id_col).alias("id_b"), F.col("__sz").alias("__sb")
         )
+        co = left.join(right, "__sh").filter(F.col("id_a") < F.col("id_b"))
         undirected = (
-            left.join(right, "__sh")
-            .filter(F.col("id_a") < F.col("id_b"))
+            _by_pair(co)
             .groupBy("id_a", "id_b")
             .agg(
                 F.count("*").alias("__common"),

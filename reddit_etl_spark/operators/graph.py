@@ -122,7 +122,15 @@ def _cc_min_prop(
             "(graph diameter exceeds max_iter); raise max_iter or use "
             "algorithm='star' (O(log^2 n) rounds on any graph)"
         )
-    return labels, rounds
+    # hand back checkpoint blocks, not a persisted frame: a persist()ed
+    # frame stays in the session's CacheManager, with its whole plan and
+    # the broadcast relations of its joins, until someone unpersists
+    # it, and callers return the labels inside results nobody does.
+    # Checkpoint blocks are freed by the ContextCleaner once the frame
+    # is garbage. One small job over the cached labels.
+    out = labels.localCheckpoint(eager=True)
+    labels.unpersist()
+    return out, rounds
 
 
 def _cc_two_phase(

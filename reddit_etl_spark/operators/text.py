@@ -277,7 +277,7 @@ def text_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def _all_word_grams(toks: Column, n: int) -> Column:
     """All word n-grams of a token array, duplicates KEPT (repetition
-    statistics need instance counts; dedup's ``word_shingles`` is the
+    statistics need instance counts; dedup's ``shingles_col`` is the
     distinct variant). Documents shorter than n tokens yield one
     truncated gram so ratios stay defined."""
     return F.transform(

@@ -26,6 +26,18 @@ def test_separate_components_stay_separate(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+@pytest.mark.parametrize("n_nodes", [3, 5])  # 5: last round checkpoints
+def test_min_prop_leaves_nothing_in_the_cache_manager(spark, n_nodes):
+    """A persisted frame stays registered in the session's CacheManager,
+    with its plan and the broadcast relations of its joins, until it
+    is unpersisted; labels returned inside a query result never are,
+    so a sequence of queries that run CC must not pile them up."""
+    spark.catalog.clearCache()
+    got = _components(spark, [(i, i + 1) for i in range(1, n_nodes)])
+    assert got == {i: 1 for i in range(1, n_nodes + 1)}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_edge_direction_is_ignored(spark):
     # same component regardless of which endpoint is src
     assert _components(spark, [(5, 1), (2, 5)]) == {1: 1, 2: 1, 5: 1}

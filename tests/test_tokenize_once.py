@@ -107,8 +107,8 @@ def ansi(spark, request):
 
 
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
-def test_word_shingles_match_single_expression(spark, docs, ansi, n):
-    from reddit_etl_spark.operators.dedup import TOKS, tokenize, word_shingles
+def test_shingle_frame_matches_single_expression(spark, docs, ansi, n):
+    from reddit_etl_spark.operators.dedup import shingle_frame
 
     old = {
         r["doc_id"]: r["s"]
@@ -116,13 +116,16 @@ def test_word_shingles_match_single_expression(spark, docs, ansi, n):
         .collect()
     }
     new = {
-        r["doc_id"]: r["s"]
-        for r in tokenize(docs, "text", "doc_id")
-        .select("doc_id", word_shingles(F.col(TOKS), n).alias("s"))
-        .collect()
+        r["doc_id"]: r["__grams"]
+        for r in shingle_frame(docs, "text", n, "doc_id").collect()
     }
     assert new == old
     assert new[0] == [""] and new[1] == [""] and new[2] == [""]  # NULL, '', ws
+    exploded = sorted(
+        tuple(r)
+        for r in shingle_frame(docs, "text", n, "doc_id", explode=True).collect()
+    )
+    assert exploded == sorted((d, g) for d, gs in old.items() for g in gs)
 
 
 def test_shingle_arrays_match_single_expression(spark, docs, ansi):
@@ -192,9 +195,15 @@ def test_char_entropy_counts_every_character(spark, docs, ansi):
 
 
 def test_shingle_arrays_plan_tokenizes_once(docs):
-    from reddit_etl_spark.operators.dedup import shingle_arrays, shingles_col
+    from reddit_etl_spark.operators.dedup import (
+        shingle_arrays,
+        shingle_frame,
+        shingles_col,
+    )
 
     assert_staged(shingle_arrays(docs, "doc_id", "text", 3, materialize=False))
+    assert_staged(shingle_frame(docs, "text", 3, "doc_id"))
+    assert_staged(shingle_frame(docs, "text", 3, "doc_id", explode=True))
     # the ad-hoc composition is the single expression this file guards
     # against: the split lands inside the lambda node
     with pytest.raises(AssertionError):
