@@ -276,12 +276,12 @@ def _by_pair(co: DataFrame) -> DataFrame:
 
     Nearly every pair occurs once per map task (sf0.1: 0.97M Jaccard
     join rows -> 0.85M pairs), so a partial aggregate before the
-    shuffle saves ~12 % of the rows while holding a hash map of almost
-    all of them in every map task: ~24 MB of execution memory per task
-    next to the shuffle writers' buffers, which made this stage run a
-    1 GB driver with 32 task slots out of heap. Repartitioning by
-    columns (no count) keeps the session's partition count and AQE's
-    coalescing."""
+    shuffle cuts ~12 % of the rows while keeping a hash map of almost
+    all of them in every map task, next to the shuffle writer's
+    per-partition buffers. Aggregating after the shuffle takes that
+    map out of the stage that holds the writers open. Repartitioning
+    by columns (no count) keeps the session's partition count and
+    AQE's coalescing."""
     return co.repartition("id_a", "id_b")
 
 
