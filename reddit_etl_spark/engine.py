@@ -13,6 +13,10 @@ object::
 
 Tables load lazily from the lakehouse paths and register as the views
 (posts, comments, post_performance) the SQL surface resolves against.
+They are read in the pipeline's declared schemas (``POSTS_SCHEMA``,
+``COMMENTS_SCHEMA``) instead of inferring one from the files, which
+costs a Spark job per table; a partition column (posts' ``subreddit``)
+comes last, as an inferred read would put it.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from . import queries as q
 from .analysis_sql import ANALYSIS_QUERIES
+from .schemas import COMMENTS_SCHEMA, POSTS_SCHEMA
 from .sources.reddit import comments_df
 from .stats import daily_subreddit_stats, write_subreddit_stats
 
@@ -42,13 +47,15 @@ class Engine:
 
     @functools.cached_property
     def posts(self) -> DataFrame:
-        return self.spark.read.parquet(self._posts_path)
+        return self.spark.read.schema(POSTS_SCHEMA).parquet(self._posts_path)
 
     @functools.cached_property
     def comments(self) -> DataFrame:
         if self._comments_path is None:
             raise ValueError("Engine built without a comments_path")
-        return self.spark.read.parquet(self._comments_path)
+        return self.spark.read.schema(COMMENTS_SCHEMA).parquet(
+            self._comments_path
+        )
 
     def _ensure_views(self) -> None:
         if not self._registered:

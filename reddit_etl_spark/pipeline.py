@@ -16,12 +16,16 @@ come from a ``heapq`` over the records in the order
 ``score DESC NULLS LAST, id ASC``, and the stats row count is an
 ``Observation`` filled in by the upsert itself. The batch frames are
 one-partition LocalRelations (sources/reddit.py), so re-reading them
-for the stats aggregate costs no extra job and no cache.
+for the stats aggregate costs no extra job and no cache. That budget
+holds for a fresh stats table; once the table has rows, the upsert
+merges them with the batch's through one shuffle by subreddit, which
+is one more job (four per batch).
 
 Divergences (documented): ties on the top-N score break by ascending
 id (the reference's pandas ``nlargest`` keeps listing order), and the
-stats upsert uses dynamic partition overwrite instead of SQLite
-INSERT OR REPLACE (same last-writer-wins semantics, sinks/writers.py).
+stats upsert merges the batch into the stored rows of its subreddit
+and overwrites that subreddit's partition (one file) instead of SQLite
+INSERT OR REPLACE (same last-writer-wins semantics, stats.py).
 """
 
 from __future__ import annotations

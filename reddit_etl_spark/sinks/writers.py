@@ -12,8 +12,10 @@ The reference appends rows to SQLite tables (``to_sql(if_exists=
   present in the incoming batch reproduces INSERT-OR-REPLACE
   (last-writer-wins, whole row replaced) exactly — no Delta/iceberg
   dependency, works on plain Parquet, and at 100 TB touches only the
-  (subreddit, date) partitions in the batch instead of rewriting the
-  table.
+  partitions in the batch instead of rewriting the table. The stats
+  table keys on (subreddit, date) but partitions by subreddit only;
+  ``stats.write_subreddit_stats`` merges each touched subreddit's rows
+  before this overwrite.
 - K5 CSV export  -> ``export_csv``.
 """
 
@@ -43,10 +45,9 @@ def upsert_partitioned(
 
     Requires every key column to be a partition column. Dynamic
     partition overwrite replaces exactly the partitions present in
-    ``df`` and leaves all others untouched — last-writer-wins per
-    (subreddit, date), matching the reference's conflict behavior
-    (script.py:265). Idempotent: re-writing the same batch leaves the
-    table unchanged.
+    ``df`` and leaves all others untouched — last-writer-wins per key,
+    matching the reference's conflict behavior (script.py:265).
+    Idempotent: re-writing the same batch leaves the table unchanged.
     """
     (
         df.write.mode("overwrite")

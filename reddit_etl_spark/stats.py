@@ -14,16 +14,29 @@ The reference SQL (script.py:264-276):
 ``DATE('now')`` is nondeterministic; the engine takes an injectable
 ``as_of`` (SURVEY P13) and defaults to current_date() only when the
 caller does not care about reproducibility.
+
+Table layout: partitioned by ``subreddit`` only, with ``date`` a data
+column, so one upsert writes one file per subreddit it touches. The
+key is still (subreddit, date); the upsert merges the batch into the
+stored rows of each touched subreddit and overwrites those subreddit
+partitions (``write_subreddit_stats``). A (subreddit, date) directory
+per key would cost a directory, a file and its own commit rename per
+row, which on a local filesystem means a forked ``chmod`` per file and
+per directory (SCALING.md, "Stats upsert: one file per subreddit").
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .sinks.writers import upsert_partitioned
+from .schemas import SUBREDDIT_STATS_SCHEMA
+from .sinks.writers import path_has_data, upsert_partitioned
 
 STATS_KEYS = ("subreddit", "date")
+#: the directory axis of the stats table: one partition per subreddit
+STATS_PARTITION = ("subreddit",)
+_BATCH = "__from_batch"
 
 
 def daily_subreddit_stats(
@@ -51,5 +64,75 @@ def daily_subreddit_stats(
 
 
 def write_subreddit_stats(stats: DataFrame, path: str) -> None:
-    """Upsert on the composite PK (subreddit, date) (K3)."""
-    upsert_partitioned(stats, path, STATS_KEYS)
+    """Upsert on the composite PK (subreddit, date) (K3): each batch
+    row replaces the stored row with its key, the touched subreddits'
+    other dates are kept, other subreddits are not rewritten, and
+    re-writing a batch changes nothing.
+
+    Into a fresh table (every ``run_pipeline`` batch into a new lake)
+    the batch is written directly: one job, a dynamic overwrite on
+    ``subreddit``. Into a table with rows, one plan: the stored rows
+    are unioned with the batch's, tagged; a row survives if its key has
+    no batch row or it is the batch row, and only subreddits the batch
+    touches survive; the same overwrite then swaps in exactly those
+    partitions. ``stats`` is referenced once, so a nondeterministic
+    batch (``limit``, sampling) replaces the key it writes. Reading and
+    overwriting one path in one job is safe: new files go to a staging
+    directory and replace the old partitions at job commit.
+
+    Files: the merge's window on ``subreddit`` puts each subreddit in
+    one task, so each touched subreddit becomes one file. A fresh write
+    gives one file per subreddit when the batch is clustered by
+    subreddit (a pipeline batch is one partition), else one per task
+    holding its rows until the next upsert of that subreddit.
+
+    Raises ``ValueError`` on a table written in the old
+    ``subreddit=/date=`` layout rather than mixing the two."""
+    spark = stats.sparkSession
+    cols = SUBREDDIT_STATS_SCHEMA.fieldNames()
+    if not _has_stored_rows(spark, path):
+        upsert_partitioned(stats.select(*cols), path, STATS_PARTITION)
+        return
+    stored = spark.read.schema(SUBREDDIT_STATS_SCHEMA).parquet(path)
+    rows = stored.select(*cols, F.lit(0).alias(_BATCH)).unionByName(
+        stats.select(*cols, F.lit(1).alias(_BATCH))
+    )
+    sub_touched = F.max(_BATCH).over(Window.partitionBy(*STATS_PARTITION))
+    key_in_batch = F.max(_BATCH).over(Window.partitionBy(*STATS_KEYS))
+    merged = (
+        rows.select(
+            *cols,
+            (F.col(_BATCH) == key_in_batch).alias("__keep_row"),
+            (sub_touched == 1).alias("__keep_sub"),
+        )
+        .where("__keep_row AND __keep_sub")
+        .select(*cols)
+    )
+    upsert_partitioned(merged, path, STATS_PARTITION)
+
+
+def _has_stored_rows(spark, path: str) -> bool:
+    """True if ``path`` holds stats rows to merge with. Lists through
+    the Hadoop FileSystem API (no Spark job), and refuses the old
+    layout, whose ``date=`` directories would otherwise be read as a
+    second partition column next to the new files."""
+    if not path_has_data(spark, path):
+        return False
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    # this check keeps a table in one layout, so one partition tells which
+    first = next(
+        (s.getPath() for s in fs.listStatus(jpath)
+         if s.isDirectory() and not s.getPath().getName().startswith(("_", "."))),
+        None,
+    )
+    if first is not None and any(
+        s.getPath().getName().startswith("date=") for s in fs.listStatus(first)
+    ):
+        raise ValueError(
+            f"stats table {path!r} uses the old subreddit=/date= layout; "
+            "the stats table is now partitioned by subreddit only, with "
+            "date a data column. Rewrite it (read it and write it "
+            "partitioned by subreddit) or use a new path."
+        )
+    return True

@@ -6,9 +6,10 @@ two paths are provably equivalent (tests/test_pipeline.py proves it on
 identical input).
 
 Scale notes: the state store holds one row per (key, open window) —
-watermark bounds it; the foreachBatch upsert reuses the batch sink's
-dynamic partition overwrite, so each micro-batch touches only the
-partitions it contains.
+watermark bounds it; the foreachBatch upsert is the batch path's
+``stats.write_subreddit_stats``, so the stream and the batch write one
+table layout (partitioned by subreddit) and each micro-batch rewrites
+only the subreddits it contains.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks.writers import upsert_partitioned
+from ..stats import write_subreddit_stats
 
 
 def windowed_event_rollup(
@@ -157,16 +158,17 @@ def stream_daily_subreddit_stats(
     """Continuously maintain the stats table from a posts stream.
 
     Update-mode windowed agg -> foreachBatch keyed upsert on
-    (subreddit, date): each micro-batch re-emits the windows it
-    touched and the partition overwrite replaces exactly those —
-    INSERT OR REPLACE, continuously. ``available_now=True`` drains
+    (subreddit, date) through ``stats.write_subreddit_stats``: each
+    micro-batch re-emits the windows it touched and the upsert
+    replaces exactly those rows, rewriting the subreddits they belong
+    to — INSERT OR REPLACE, continuously. ``available_now=True`` drains
     the currently-available input then stops (the batch-parity mode
     used in tests and backfills)."""
     agg = daily_stats_agg(posts_stream)
 
     def upsert_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if not batch_df.isEmpty():
-            upsert_partitioned(batch_df, stats_path, ("subreddit", "date"))
+            write_subreddit_stats(batch_df, stats_path)
 
     writer = (
         agg.writeStream.outputMode("update")

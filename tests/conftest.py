@@ -195,3 +195,16 @@ def assert_df_matches_sql(df, con, sql: str, ordered: bool = False):
     assert len(a) == len(b), f"row count {len(a)} vs {len(b)}"
     for i, (ra, rb) in enumerate(zip(a, b)):
         assert ra == rb, f"row {i} differs:\n spark:  {ra}\n oracle: {rb}"
+
+
+def jobs_in_group(spark, group: str, fn) -> int:
+    """Run ``fn()`` under Spark job group ``group`` and return how many
+    jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

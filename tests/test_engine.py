@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from reddit_etl_spark.engine import Engine
 from reddit_etl_spark.plans.inspect import explain_str
 from reddit_etl_spark.sinks.writers import append_parquet
-from tests.conftest import AS_OF
+from tests.conftest import AS_OF, jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -78,3 +78,28 @@ def test_engine_data_quality_clean_fixture(engine):
     assert all(v == 0 for v, _ in report.values()), report
     assert any(c.startswith("referential(post_id") for c in report)
     assert any(c.startswith("unique(id)") for c in report)
+
+
+def test_engine_views_launch_no_job(spark, lake):
+    """The tables are read in their declared schemas: registering the
+    views infers nothing, so it runs no Spark job."""
+    eng = Engine(spark, str(lake / "posts"), str(lake / "comments"))
+    assert jobs_in_group(spark, "engine-views", eng._ensure_views) == 0
+
+
+@pytest.mark.parametrize("partition_by", [("subreddit",), ()])
+def test_engine_declared_schemas_equal_inferred(
+    spark, posts, comments, tmp_path, partition_by
+):
+    """Declared-schema reads give the columns, order and types an
+    inferred read gives, on a subreddit-partitioned lake (the
+    partition column comes last) and on an unpartitioned one."""
+    append_parquet(posts, str(tmp_path / "p"), partition_by=partition_by)
+    append_parquet(comments, str(tmp_path / "c"))
+    eng = Engine(spark, str(tmp_path / "p"), str(tmp_path / "c"))
+    for got, path in ((eng.posts, "p"), (eng.comments, "c")):
+        inferred = spark.read.parquet(str(tmp_path / path))
+        assert got.columns == inferred.columns
+        assert got.schema == inferred.schema
+        assert got.exceptAll(inferred).isEmpty()
+        assert inferred.exceptAll(got).isEmpty()

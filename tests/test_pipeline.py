@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
+import random
 import time
 
 import pytest
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 from reddit_etl_spark.pipeline import run_pipeline, top_post_ids
+from reddit_etl_spark.schemas import SUBREDDIT_STATS_SCHEMA
 from reddit_etl_spark.sinks.writers import append_parquet, upsert_partitioned
 from reddit_etl_spark.sources.reddit import (
     MockRedditSource,
@@ -24,6 +27,7 @@ from reddit_etl_spark.streaming.stats_stream import (
     stream_daily_subreddit_stats,
     windowed_event_rollup,
 )
+from tests.conftest import jobs_in_group
 
 AS_OF = dt.date(2025, 9, 1)
 
@@ -324,6 +328,168 @@ def test_upsert_requires_no_delta(spark, tmp_path):
     assert rows == {"a": 99, "b": 2}
 
 
+# --- the stats table: one partition, one file per subreddit ---------------
+
+_DAYS = [dt.date(2025, 9, d) for d in range(1, 5)]
+_STATS_COLS = SUBREDDIT_STATS_SCHEMA.fieldNames()
+
+
+def _data_files(path: str) -> dict[str, list[str]]:
+    """Data files under a table, by directory relative to the table
+    (names starting with '.' or '_' are Spark bookkeeping)."""
+    out = {}
+    for base, _, names in os.walk(path):
+        files = sorted(n for n in names if not n.startswith((".", "_")))
+        if files:
+            out[os.path.relpath(base, path)] = files
+    return out
+
+
+def _assert_one_file_per_subreddit(path: str, subreddits) -> None:
+    files = _data_files(path)
+    assert sorted(files) == sorted(f"subreddit={s}" for s in subreddits)
+    assert all(len(f) == 1 for f in files.values()), files
+
+
+def _tree_bytes(path: str) -> dict[str, bytes]:
+    out = {}
+    for base, _, names in os.walk(path):
+        for n in names:
+            with open(os.path.join(base, n), "rb") as f:
+                out[os.path.relpath(os.path.join(base, n), path)] = f.read()
+    return out
+
+
+def _stored_stats(spark, path: str) -> list[tuple]:
+    return sorted(
+        tuple(r) for r in spark.read.parquet(path).select(*_STATS_COLS).collect()
+    )
+
+
+def test_pipeline_stats_one_file_per_subreddit(spark, tmp_path):
+    """A pipeline batch leaves one data file per subreddit directly
+    under its subreddit directory, with ``date`` a data column — into
+    a fresh table and into one that already has the rows."""
+    posts = _mock_posts()
+    for i, p in enumerate(posts):  # three dates per subreddit
+        p["created_utc"] -= dt.timedelta(days=i % 3)
+    src = MockRedditSource(posts, _mock_comments(posts))
+    paths = {t: str(tmp_path / t) for t in ("posts", "comments", "stats")}
+    subs = ["python", "datascience"]
+    for _ in range(2):
+        results = run_pipeline(
+            spark, src, subs, paths["posts"], paths["comments"],
+            paths["stats"], top_n_for_comments=2, comments_limit=1,
+        )
+        assert not any(r.errors for r in results)
+        assert [r.stats_rows for r in results] == [3, 3]
+        _assert_one_file_per_subreddit(paths["stats"], subs)
+    want = daily_subreddit_stats(
+        spark.read.parquet(paths["posts"]).dropDuplicates(["id"])
+    )
+    assert _stored_stats(spark, paths["stats"]) == sorted(
+        tuple(r) for r in want.select(*_STATS_COLS).collect()
+    )
+
+
+def test_pipeline_batch_into_an_existing_stats_table_jobs(spark, tmp_path):
+    """With rows already stored, the upsert merges them in one plan:
+    the shuffle that groups the stored and batch rows by subreddit is
+    one more job, so a batch is four jobs instead of three."""
+    posts = _mock_posts()
+    src = MockRedditSource(posts, _mock_comments(posts))
+    args = (str(tmp_path / "posts"), str(tmp_path / "comments"),
+            str(tmp_path / "stats"))
+
+    def batch():
+        (res,) = run_pipeline(spark, src, ["python"], *args, as_of=F.lit(AS_OF))
+        assert not res.errors and res.stats_rows == 1
+
+    batch()
+    assert 0 < jobs_in_group(spark, "test-stats-existing", batch) <= 4
+    _assert_one_file_per_subreddit(args[2], ["python"])
+
+
+def test_upsert_replaces_keys_and_keeps_other_dates(spark, tmp_path):
+    """A second batch for one subreddit, with overlapping dates and one
+    new date, replaces the overlapping rows, keeps the other date and
+    adds the new one; the other subreddit's files stay byte for byte."""
+    path = str(tmp_path / "stats")
+    first = [("a", d, i + 1, 1.5 * i, 2.0, 10 + i) for i, d in enumerate(_DAYS[:3])]
+    first += [("b", d, 7, 0.5, 0.25, 3) for d in _DAYS[:2]]
+    write_subreddit_stats(
+        spark.createDataFrame(first, SUBREDDIT_STATS_SCHEMA), path
+    )
+    b_before = _tree_bytes(os.path.join(path, "subreddit=b"))
+    second = [("a", d, 100 + i, -1.0, 9.0, 99) for i, d in enumerate(_DAYS[1:])]
+    write_subreddit_stats(
+        spark.createDataFrame(second, SUBREDDIT_STATS_SCHEMA), path
+    )
+    want = {r[:2]: r for r in first}
+    want.update({r[:2]: r for r in second})
+    assert _stored_stats(spark, path) == sorted(want.values())
+    assert _tree_bytes(os.path.join(path, "subreddit=b")) == b_before
+    assert len(_data_files(path)["subreddit=a"]) == 1
+
+
+def test_upsert_rewrite_is_idempotent(spark, tmp_path, posts):
+    """Writing the same batch again leaves the same rows and the same
+    layout."""
+    path = str(tmp_path / "stats")
+    stats = daily_subreddit_stats(posts)
+    write_subreddit_stats(stats, path)
+    once = _stored_stats(spark, path)
+    write_subreddit_stats(stats, path)
+    assert _stored_stats(spark, path) == once
+    assert len(once) == stats.count()
+    _assert_one_file_per_subreddit(
+        path, {r.subreddit for r in stats.select("subreddit").collect()}
+    )
+
+
+def test_upsert_nondeterministic_batch_replaces_the_row_it_writes(
+    spark, tmp_path, posts
+):
+    """The batch frame is evaluated once: a batch that picks a random
+    row on every evaluation still replaces exactly the key it writes,
+    with no key lost or doubled."""
+    path = str(tmp_path / "stats")
+    stats = daily_subreddit_stats(posts)
+    write_subreddit_stats(stats, path)
+    before = _stored_stats(spark, path)
+    noise = F.udf(lambda: random.random(), "double").asNondeterministic()
+    pick = (
+        stats.withColumn("__r", noise())
+        .orderBy("__r")
+        .limit(1)
+        .drop("__r")
+        .withColumn("total_posts", F.lit(-1).cast("long"))
+    )
+    write_subreddit_stats(pick, path)
+    after = _stored_stats(spark, path)
+    assert [r[:2] for r in after] == [r[:2] for r in before]
+    changed = [(b, a) for b, a in zip(before, after) if a != b]
+    assert len(changed) == 1
+    (old, new), = changed
+    assert new == old[:2] + (-1,) + old[3:]
+
+
+def test_upsert_refuses_the_old_layout(spark, tmp_path, posts):
+    """A table with (subreddit, date) directories is refused, without a
+    Spark job and without touching it, instead of mixing layouts."""
+    path = str(tmp_path / "stats")
+    stats = daily_subreddit_stats(posts)
+    upsert_partitioned(stats, path, ("subreddit", "date"))
+    before = _tree_bytes(path)
+
+    def write():
+        with pytest.raises(ValueError, match="layout"):
+            write_subreddit_stats(stats, path)
+
+    assert jobs_in_group(spark, "test-stats-old-layout", write) == 0
+    assert _tree_bytes(path) == before
+
+
 def test_append_parquet_appends(spark, tmp_path):
     df = spark.createDataFrame([(1,)], "x long")
     append_parquet(df, str(tmp_path / "t"))
@@ -353,6 +519,43 @@ def test_stream_stats_matches_batch(spark, posts, tmp_path):
     gs = sorted(map(tuple, got.select(*want.columns).collect()))
     ws = sorted(map(tuple, want.collect()))
     assert gs == ws
+
+
+def test_stream_stats_two_batches_match_batch_layout(spark, posts, tmp_path):
+    """Two micro-batches whose (subreddit, date) windows overlap: the
+    second re-emits the shared day and the upsert replaces it. The
+    stream writes the batch path's layout — the second batch touches
+    every subreddit, so each is one file — and the rows equal the
+    batch aggregate."""
+    src_dir = str(tmp_path / "in")
+    day = F.to_date("created_utc")
+    mid = dt.date(2025, 8, 23)
+    odd = F.pmod(F.hash("id"), F.lit(2)) == 1
+    first = (day < mid) | ((day == mid) & ~odd)
+    for part in (posts.filter(first), posts.filter(~first)):
+        part.coalesce(1).write.mode("append").parquet(src_dir)
+    stream = (
+        spark.readStream.schema(posts.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    q = stream_daily_subreddit_stats(
+        stream,
+        stats_path=str(tmp_path / "stats"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert [p["numInputRows"] > 0 for p in q.recentProgress].count(True) == 2
+
+    want = daily_subreddit_stats(posts)
+    assert _stored_stats(spark, str(tmp_path / "stats")) == sorted(
+        tuple(r) for r in want.select(*_STATS_COLS).collect()
+    )
+    _assert_one_file_per_subreddit(
+        str(tmp_path / "stats"),
+        {r.subreddit for r in want.select("subreddit").collect()},
+    )
 
 
 def test_windowed_rollup_batch_twin(spark, tmp_path):
