@@ -16,7 +16,10 @@ Tables load lazily from the lakehouse paths and register as the views
 They are read in the pipeline's declared schemas (``POSTS_SCHEMA``,
 ``COMMENTS_SCHEMA``) instead of inferring one from the files, which
 costs a Spark job per table; a partition column (posts' ``subreddit``)
-comes last, as an inferred read would put it.
+comes last, as an inferred read would put it. The declared schema wins
+over the files: a declared column missing from a file (a lake written
+before the column was added) reads as NULL rather than failing, and a
+column found only in the files is not read.
 """
 
 from __future__ import annotations
@@ -96,7 +99,10 @@ class Engine:
         subreddit: str | None = None,
     ) -> None:
         stats = daily_subreddit_stats(self.posts, as_of=as_of, subreddit=subreddit)
-        write_subreddit_stats(stats, stats_path)
+        write_subreddit_stats(
+            stats, stats_path,
+            subreddits=None if subreddit is None else (subreddit,),
+        )
 
     # --- DataFrame builders (SURVEY §2.11) ----------------------------
     def q01(self):

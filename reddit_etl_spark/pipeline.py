@@ -17,9 +17,9 @@ come from a ``heapq`` over the records in the order
 ``Observation`` filled in by the upsert itself. The batch frames are
 one-partition LocalRelations (sources/reddit.py), so re-reading them
 for the stats aggregate costs no extra job and no cache. That budget
-holds for a fresh stats table; once the table has rows, the upsert
-merges them with the batch's through one shuffle by subreddit, which
-is one more job (four per batch).
+holds once the stats table has rows too: the upsert names the batch's
+subreddit, so it reads only that subreddit's stored file and merges it
+with the batch in one task, with no shuffle (stats.py).
 
 Divergences (documented): ties on the top-N score break by ascending
 id (the reference's pandas ``nlargest`` keeps listing order), and the
@@ -128,7 +128,7 @@ def _run_one(
     stats = daily_subreddit_stats(transformed, as_of=as_of, subreddit=sub)
     written = Observation()
     stats = stats.observe(written, F.count(F.lit(1)).alias("rows"))
-    write_subreddit_stats(stats, stats_path)
+    write_subreddit_stats(stats, stats_path, subreddits=(sub,))
     res.stats_rows = written.get["rows"]
 
 

@@ -27,7 +27,9 @@ per directory (SCALING.md, "Stats upsert: one file per subreddit").
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .schemas import SUBREDDIT_STATS_SCHEMA
@@ -63,7 +65,9 @@ def daily_subreddit_stats(
     )
 
 
-def write_subreddit_stats(stats: DataFrame, path: str) -> None:
+def write_subreddit_stats(
+    stats: DataFrame, path: str, subreddits: Sequence[str] | None = None
+) -> None:
     """Upsert on the composite PK (subreddit, date) (K3): each batch
     row replaces the stored row with its key, the touched subreddits'
     other dates are kept, other subreddits are not rewritten, and
@@ -80,46 +84,100 @@ def write_subreddit_stats(stats: DataFrame, path: str) -> None:
     overwriting one path in one job is safe: new files go to a staging
     directory and replace the old partitions at job commit.
 
-    Files: the merge's window on ``subreddit`` puts each subreddit in
-    one task, so each touched subreddit becomes one file. A fresh write
-    gives one file per subreddit when the batch is clustered by
-    subreddit (a pipeline batch is one partition), else one per task
-    holding its rows until the next upsert of that subreddit.
+    ``subreddits``, when the caller knows them (``run_pipeline`` writes
+    one subreddit per batch), lists every subreddit the batch may hold:
+    only those partition directories are read, so the upsert's cost
+    does not grow with the number of subreddits in the table, and the
+    merge runs in one task with no shuffle. A batch row of another
+    subreddit fails the job before anything is committed. Without
+    them the whole table is read and the merge shuffles by subreddit.
+    Even pruned, the merge costs about twice the old layout's blind
+    write of a one-date batch, since it reads and rewrites the
+    subreddit's stored file (SCALING.md, "Stats upsert: one file per
+    subreddit").
+
+    Files: the merge puts each subreddit in one task, so each touched
+    subreddit becomes one file. A fresh write gives one file per
+    subreddit when the batch is clustered by subreddit (a pipeline
+    batch is one partition), else one per task holding its rows until
+    the next upsert of that subreddit.
+
+    One writer at a time: two upserts that touch the same subreddit at
+    once each merge the rows they read, and the later commit replaces
+    the subreddit with its merge, dropping the other's dates. The
+    commit deletes each touched subreddit directory and then renames
+    the staged one into place, so a crash between the two loses that
+    subreddit's history (the staged files stay under
+    ``.spark-staging-*``). An upsert therefore refuses to start while a
+    ``.spark-staging-*`` directory is present under ``path`` (raises
+    ``RuntimeError``): that is either a write in progress or an
+    interrupted commit whose staged files must be moved into place or
+    removed first. The check narrows the race; it does not close it.
 
     Raises ``ValueError`` on a table written in the old
     ``subreddit=/date=`` layout rather than mixing the two."""
     spark = stats.sparkSession
     cols = SUBREDDIT_STATS_SCHEMA.fieldNames()
-    if not _has_stored_rows(spark, path):
-        upsert_partitioned(stats.select(*cols), path, STATS_PARTITION)
-        return
-    stored = spark.read.schema(SUBREDDIT_STATS_SCHEMA).parquet(path)
-    rows = stored.select(*cols, F.lit(0).alias(_BATCH)).unionByName(
-        stats.select(*cols, F.lit(1).alias(_BATCH))
-    )
-    sub_touched = F.max(_BATCH).over(Window.partitionBy(*STATS_PARTITION))
-    key_in_batch = F.max(_BATCH).over(Window.partitionBy(*STATS_KEYS))
-    merged = (
-        rows.select(
-            *cols,
-            (F.col(_BATCH) == key_in_batch).alias("__keep_row"),
-            (sub_touched == 1).alias("__keep_sub"),
+    batch = stats.select(*cols)
+    if subreddits is not None:
+        subreddits = list(dict.fromkeys(subreddits))
+        batch = batch.where(
+            F.when(F.col("subreddit").isin(subreddits), True).otherwise(
+                F.raise_error(F.lit(
+                    f"stats batch holds a subreddit outside {subreddits!r}"
+                ))
+            )
         )
-        .where("__keep_row AND __keep_sub")
+    stored = _stored_rows(spark, path, subreddits)
+    if stored is None:
+        upsert_partitioned(batch, path, STATS_PARTITION)
+        return
+    rows = stored.withColumn(_BATCH, F.lit(0)).unionByName(
+        batch.withColumn(_BATCH, F.lit(1))
+    )
+    if subreddits is not None:
+        # a few subreddits' rows: one partition satisfies the windows'
+        # clustering, so the plan has no Exchange (and no extra job)
+        rows = rows.coalesce(1)
+    # a row survives if its key has no batch row or it is the batch
+    # row, and its subreddit is touched by the batch (one expression:
+    # each DataFrame call is one more analysis on the driver)
+    merged = (
+        rows.selectExpr(
+            *cols,
+            f"{_BATCH} = max({_BATCH}) OVER (PARTITION BY {', '.join(STATS_KEYS)})"
+            f" AND max({_BATCH}) OVER (PARTITION BY {', '.join(STATS_PARTITION)}) = 1"
+            " AS __keep",
+        )
+        .where("__keep")
         .select(*cols)
     )
     upsert_partitioned(merged, path, STATS_PARTITION)
 
 
-def _has_stored_rows(spark, path: str) -> bool:
-    """True if ``path`` holds stats rows to merge with. Lists through
-    the Hadoop FileSystem API (no Spark job), and refuses the old
-    layout, whose ``date=`` directories would otherwise be read as a
-    second partition column next to the new files."""
-    if not path_has_data(spark, path):
-        return False
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+def _stored_rows(
+    spark, path: str, subreddits: list[str] | None
+) -> DataFrame | None:
+    """The stored rows to merge the batch with: the whole table, or
+    only the partitions of ``subreddits``; None when there are none.
+    Lists through the Hadoop FileSystem API (no Spark job). Refuses a
+    path with a ``.spark-staging-*`` directory (see
+    ``write_subreddit_stats``) and the old layout, whose ``date=``
+    directories would otherwise be read as a second partition column
+    next to the new files."""
+    jvm = spark._jvm
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.globStatus(jvm.org.apache.hadoop.fs.Path(jpath, ".spark-staging-*")):
+        raise RuntimeError(
+            f"stats table {path!r} holds a .spark-staging-* directory: "
+            "another write is in progress, or one was interrupted during "
+            "its commit. The stats table takes one writer at a time; "
+            "after an interrupted commit, move the staged subreddit "
+            "directories into place (or remove them) before upserting."
+        )
+    if not path_has_data(spark, path):
+        return None
     # this check keeps a table in one layout, so one partition tells which
     first = next(
         (s.getPath() for s in fs.listStatus(jpath)
@@ -135,4 +193,17 @@ def _has_stored_rows(spark, path: str) -> bool:
             "date a data column. Rewrite it (read it and write it "
             "partitioned by subreddit) or use a new path."
         )
-    return True
+    reader = spark.read.schema(SUBREDDIT_STATS_SCHEMA)
+    if subreddits is None:
+        return reader.parquet(path)
+    escape = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    parts = [
+        part for part in (
+            jvm.org.apache.hadoop.fs.Path(jpath, f"subreddit={escape(s)}")
+            for s in subreddits
+        )
+        if fs.exists(part)
+    ]
+    if not parts:
+        return None
+    return reader.option("basePath", path).parquet(*(p.toString() for p in parts))

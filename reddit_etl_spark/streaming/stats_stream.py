@@ -9,7 +9,9 @@ Scale notes: the state store holds one row per (key, open window) —
 watermark bounds it; the foreachBatch upsert is the batch path's
 ``stats.write_subreddit_stats``, so the stream and the batch write one
 table layout (partitioned by subreddit) and each micro-batch rewrites
-only the subreddits it contains.
+only the subreddits it contains. The table takes one writer at a time,
+so a running stream and a batch upsert (``run_pipeline``,
+``Engine.refresh_stats``) must not write the same path at once.
 """
 
 from __future__ import annotations

@@ -201,20 +201,17 @@ def test_pipeline_batch_runs_at_most_three_jobs(spark, tmp_path):
     upsert, nothing else."""
     posts = _mock_posts()
     src = MockRedditSource(posts, _mock_comments(posts))
-    sc = spark.sparkContext
-    group = "test-pipeline-batch-jobs"
-    sc.setJobGroup(group, "one run_pipeline batch")
-    try:
-        (res,) = run_pipeline(
+    results = []
+    jobs = jobs_in_group(spark, "test-pipeline-batch-jobs", lambda: results.extend(
+        run_pipeline(
             spark, src, ["python"], str(tmp_path / "posts"),
             str(tmp_path / "comments"), str(tmp_path / "stats"),
             as_of=F.lit(AS_OF),
         )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    ))
+    (res,) = results
     assert not res.errors and res.comments_loaded > 0
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert 0 < jobs <= 3
 
 
 _TS = TimestampType()
@@ -366,6 +363,13 @@ def _stored_stats(spark, path: str) -> list[tuple]:
     )
 
 
+def _two_subreddit_table(spark, path: str) -> list[tuple]:
+    rows = [("a", d, i + 1, 1.5 * i, 2.0, 10 + i) for i, d in enumerate(_DAYS[:3])]
+    rows += [("b", d, 7, 0.5, 0.25, 3) for d in _DAYS[:2]]
+    write_subreddit_stats(spark.createDataFrame(rows, SUBREDDIT_STATS_SCHEMA), path)
+    return rows
+
+
 def test_pipeline_stats_one_file_per_subreddit(spark, tmp_path):
     """A pipeline batch leaves one data file per subreddit directly
     under its subreddit directory, with ``date`` a data column — into
@@ -393,9 +397,10 @@ def test_pipeline_stats_one_file_per_subreddit(spark, tmp_path):
 
 
 def test_pipeline_batch_into_an_existing_stats_table_jobs(spark, tmp_path):
-    """With rows already stored, the upsert merges them in one plan:
-    the shuffle that groups the stored and batch rows by subreddit is
-    one more job, so a batch is four jobs instead of three."""
+    """With rows already stored, the upsert merges them in one plan.
+    ``run_pipeline`` names the batch's subreddit, so only its partition
+    is read and the merge runs in one task with no shuffle: a batch
+    stays at three jobs."""
     posts = _mock_posts()
     src = MockRedditSource(posts, _mock_comments(posts))
     args = (str(tmp_path / "posts"), str(tmp_path / "comments"),
@@ -406,7 +411,7 @@ def test_pipeline_batch_into_an_existing_stats_table_jobs(spark, tmp_path):
         assert not res.errors and res.stats_rows == 1
 
     batch()
-    assert 0 < jobs_in_group(spark, "test-stats-existing", batch) <= 4
+    assert 0 < jobs_in_group(spark, "test-stats-existing", batch) <= 3
     _assert_one_file_per_subreddit(args[2], ["python"])
 
 
@@ -415,11 +420,7 @@ def test_upsert_replaces_keys_and_keeps_other_dates(spark, tmp_path):
     new date, replaces the overlapping rows, keeps the other date and
     adds the new one; the other subreddit's files stay byte for byte."""
     path = str(tmp_path / "stats")
-    first = [("a", d, i + 1, 1.5 * i, 2.0, 10 + i) for i, d in enumerate(_DAYS[:3])]
-    first += [("b", d, 7, 0.5, 0.25, 3) for d in _DAYS[:2]]
-    write_subreddit_stats(
-        spark.createDataFrame(first, SUBREDDIT_STATS_SCHEMA), path
-    )
+    first = _two_subreddit_table(spark, path)
     b_before = _tree_bytes(os.path.join(path, "subreddit=b"))
     second = [("a", d, 100 + i, -1.0, 9.0, 99) for i, d in enumerate(_DAYS[1:])]
     write_subreddit_stats(
@@ -487,6 +488,68 @@ def test_upsert_refuses_the_old_layout(spark, tmp_path, posts):
             write_subreddit_stats(stats, path)
 
     assert jobs_in_group(spark, "test-stats-old-layout", write) == 0
+    assert _tree_bytes(path) == before
+
+
+def test_upsert_named_subreddits_read_only_their_partitions(spark, tmp_path):
+    """With ``subreddits`` named, only their partitions are read: an
+    unreadable file of another subreddit does not stop the upsert, and
+    a named subreddit with no stored rows is written as it comes."""
+    path = str(tmp_path / "stats")
+    first = _two_subreddit_table(spark, path)
+    (b_file,) = _data_files(path)["subreddit=b"]
+    with open(os.path.join(path, "subreddit=b", b_file), "wb") as f:
+        f.write(b"not parquet")
+    b_before = _tree_bytes(os.path.join(path, "subreddit=b"))
+    second = [("a", _DAYS[2], 50, 0.0, 0.0, 50), ("a", _DAYS[3], 60, 0.0, 0.0, 60),
+              ("c", _DAYS[0], 1, 1.0, 1.0, 1)]
+    write_subreddit_stats(
+        spark.createDataFrame(second, SUBREDDIT_STATS_SCHEMA), path,
+        subreddits=("a", "c"),
+    )
+    assert _tree_bytes(os.path.join(path, "subreddit=b")) == b_before
+    want = {r[:2]: r for r in first if r[0] == "a"}
+    want.update({r[:2]: r for r in second})
+    for sub in ("a", "c"):
+        rows = spark.read.option("basePath", path).parquet(
+            os.path.join(path, f"subreddit={sub}")
+        ).select(*_STATS_COLS).collect()
+        assert sorted(tuple(r) for r in rows) == sorted(
+            r for r in want.values() if r[0] == sub
+        )
+        assert len(_data_files(path)[f"subreddit={sub}"]) == 1
+
+
+def test_upsert_named_subreddits_refuse_other_rows(spark, tmp_path):
+    """A batch row of a subreddit not named fails the job before its
+    commit, leaving the table as it was."""
+    path = str(tmp_path / "stats")
+    _two_subreddit_table(spark, path)
+    before = _tree_bytes(path)
+    batch = spark.createDataFrame(
+        [("a", _DAYS[0], 5, 0.0, 0.0, 5), ("b", _DAYS[0], 5, 0.0, 0.0, 5)],
+        SUBREDDIT_STATS_SCHEMA,
+    )
+    with pytest.raises(Exception, match="outside"):
+        write_subreddit_stats(batch, path, subreddits=("a",))
+    assert _tree_bytes(path) == before
+
+
+def test_upsert_refuses_a_staging_directory(spark, tmp_path, posts):
+    """A ``.spark-staging-*`` directory (a write in progress, or a
+    commit cut short) stops the upsert before any Spark job, leaving
+    the table as it was."""
+    path = str(tmp_path / "stats")
+    stats = daily_subreddit_stats(posts)
+    write_subreddit_stats(stats, path)
+    os.makedirs(os.path.join(path, ".spark-staging-0"))
+    before = _tree_bytes(path)
+
+    def write():
+        with pytest.raises(RuntimeError, match="one writer at a time"):
+            write_subreddit_stats(stats, path)
+
+    assert jobs_in_group(spark, "test-stats-staging", write) == 0
     assert _tree_bytes(path) == before
 
 
