@@ -22,4 +22,13 @@ shuffle-minimal, broadcast-aware, AQE-enabled) even though tests run on
 
 __version__ = "0.1.0"
 
-from .engine import Engine  # noqa: E402,F401 — the primary user-facing API
+
+def __getattr__(name: str):
+    # ``Engine``, the primary user-facing API, imports on first use: the
+    # Python-worker daemon (``pyworker``) imports this package and should
+    # not pay for the query modules
+    if name == "Engine":
+        from .engine import Engine
+
+        return Engine
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -20,6 +20,31 @@ comes last, as an inferred read would put it. The declared schema wins
 over the files: a declared column missing from a file (a lake written
 before the column was added) reads as NULL rather than failing, and a
 column found only in the files is not read.
+
+A small lake is read as one partition. When a table's size, from the
+file index the read lists, is at most both the session's
+``spark.sql.autoBroadcastJoinThreshold`` and
+``spark.sql.adaptive.coalescePartitions.minPartitionSize``, ``posts``
+and ``comments`` return the read ``coalesce(1)``. The frame then
+reports ``SinglePartition``, which satisfies every clustered and
+ordered distribution, so the plans of the aggregates, windows, sorts
+and joins over the views have no Exchange, and AQE runs no extra job
+per shuffle; at the reference's scale (tens to thousands of posts) a
+shuffle is only scheduling latency. Filters, partition pruning and
+column pruning still reach the scan: the optimizer pushes them through
+the ``Repartition``. The bounds are Spark's own: the broadcast
+threshold is its limit for "small enough to ship whole to one task"
+(``-1`` turns off both broadcasts and this path), and the minimum
+partition size is the smallest partition AQE coalesces a shuffle into
+(1 MB by default), so AQE would put a shuffle of that little data in
+one partition anyway. Above it the one task reads the files in series and
+loses to the parallel scan: a lake of daily pipeline batches is ~20 KB
+per file, and the one-partition path tied at ~0.9 MB and lost from
+~2.8 MB on (SCALING.md, "Small lakes read as one partition"). The
+decision is made once per ``Engine``, when a table's files are first
+listed (the first use of ``posts`` or ``comments``); a lake that grows
+past the bound afterwards keeps one partition until a new ``Engine``
+is built.
 """
 
 from __future__ import annotations
@@ -50,15 +75,28 @@ class Engine:
 
     @functools.cached_property
     def posts(self) -> DataFrame:
-        return self.spark.read.schema(POSTS_SCHEMA).parquet(self._posts_path)
+        return self._read(POSTS_SCHEMA, self._posts_path)
 
     @functools.cached_property
     def comments(self) -> DataFrame:
         if self._comments_path is None:
             raise ValueError("Engine built without a comments_path")
-        return self.spark.read.schema(COMMENTS_SCHEMA).parquet(
-            self._comments_path
+        return self._read(COMMENTS_SCHEMA, self._comments_path)
+
+    def _read(self, schema, path: str) -> DataFrame:
+        """The table in its declared schema, as one partition when its
+        size is at most the broadcast threshold and AQE's minimum
+        partition size. The size is the optimized plan's statistics,
+        taken from the file index the read just listed: no job runs."""
+        df = self.spark.read.schema(schema).parquet(path)
+        conf = self.spark._jsparkSession.sessionState().conf()
+        min_partition = conf.getConf(
+            self.spark._jvm.org.apache.spark.sql.internal.SQLConf
+            .COALESCE_PARTITIONS_MIN_PARTITION_SIZE()
         )
+        size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        small = size <= min(conf.autoBroadcastJoinThreshold(), min_partition)
+        return df.coalesce(1) if small else df
 
     def _ensure_views(self) -> None:
         if not self._registered:

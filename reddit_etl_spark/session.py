@@ -10,6 +10,12 @@ driver harness — gets the same tuned session:
 - AQE on (runtime coalescing, skew-join splitting) — this is what makes
   the same plans survive a 100x scale-up without re-tuning.
 - Arrow on for the few pandas-UDF extension operators.
+- On a ``local`` master, Python workers fork from
+  ``reddit_etl_spark.pyworker``, which stops each task from re-reading
+  every zip archive on ``sys.path`` (SCALING.md, "The per-Python-task
+  floor"); the package's directory goes on the workers' ``PYTHONPATH``
+  so they can import it. A cluster keeps PySpark's own daemon: there
+  the package reaches the executors only as the job ships it.
 """
 
 from __future__ import annotations
@@ -19,6 +25,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: the directory holding the package, for the Python workers' path
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -53,10 +61,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master is None and "SPARK_MASTER" not in os.environ:
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        if master.startswith("local"):
+            # the workers share the driver's filesystem: fork them from
+            # the package's daemon, found next to this package
+            builder = builder.config(
+                "spark.python.daemon.module", "reddit_etl_spark.pyworker"
+            ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

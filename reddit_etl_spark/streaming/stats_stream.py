@@ -8,9 +8,9 @@ identical input).
 Scale notes: the state store holds one row per (key, open window) —
 watermark bounds it; the foreachBatch upsert is the batch path's
 ``stats.write_subreddit_stats``, so the stream and the batch write one
-table layout (partitioned by subreddit) and each micro-batch rewrites
-only the subreddits it contains. The table takes one writer at a time,
-so a running stream and a batch upsert (``run_pipeline``,
+table layout (partitioned by subreddit) and each micro-batch reads and
+rewrites only the subreddits it contains. The table takes one writer
+at a time, so a running stream and a batch upsert (``run_pipeline``,
 ``Engine.refresh_stats``) must not write the same path at once.
 """
 
@@ -169,8 +169,19 @@ def stream_daily_subreddit_stats(
     agg = daily_stats_agg(posts_stream)
 
     def upsert_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            write_subreddit_stats(batch_df, stats_path)
+        # one evaluation of the stateful aggregate per micro-batch: its
+        # rows (one per (subreddit, date) the batch updated) come to the
+        # driver, and the upsert writes them from a local relation, so
+        # an emptiness check and the write do not each re-run it
+        rows = batch_df.toArrow()
+        if rows.num_rows == 0:
+            return
+        batch = batch_df.sparkSession.createDataFrame(rows, batch_df.schema)
+        subreddits = set(rows.column("subreddit").to_pylist())
+        write_subreddit_stats(
+            batch.coalesce(1), stats_path,
+            subreddits=None if None in subreddits else sorted(subreddits),
+        )
 
     writer = (
         agg.writeStream.outputMode("update")

@@ -65,29 +65,26 @@ def clean_title_col(title: Column | str) -> Column:
 def transform_posts(df: DataFrame, extracted_at: Column | None = None) -> DataFrame:
     """Derive the 7 transform columns + extracted_at over raw posts.
 
-    Ordering is load-bearing and matches the reference exactly:
-    lengths are measured on the raw columns FIRST, then title is
-    cleaned and selftext back-filled (script.py:198-217).
+    One projection: every expression reads the RAW columns, so the
+    lengths measure the raw title and selftext (P1, P2) while the same
+    projection cleans title and back-fills selftext (P8, P9), the order
+    the reference imposes by sequencing (script.py:198-217). Replaced
+    columns keep their position and the derived ones follow in the
+    order below; one ``withColumns`` is one analysis on the driver,
+    where a ``withColumn`` chain re-analyses the plan per column.
     """
     ts = extracted_at if extracted_at is not None else F.current_timestamp()
-    return (
-        df
+    return df.withColumns({
         # lengths on RAW values (P1, P2)
-        .withColumn("title_length", F.length("title").cast("long"))
-        .withColumn("selftext_length", F.length("selftext").cast("long"))
+        "title_length": F.length("title").cast("long"),
+        "selftext_length": F.length("selftext").cast("long"),
         # NULL selftext => has_selftext False, NOT NULL (P3)
-        .withColumn(
-            "has_selftext",
-            F.coalesce(F.length("selftext") > 0, F.lit(False)),
-        )
-        .withColumn("hour_posted", F.hour("created_utc").cast("long"))
-        .withColumn("day_of_week", F.weekday("created_utc").cast("long"))  # Mon=0 (P5)
-        .withColumn(
-            "engagement_rate", engagement_rate_col("num_comments", "score")
-        )
-        .withColumn("score_category", score_category_col("score"))
-        # cleaning AFTER measuring (P8 after P1)
-        .withColumn("title", clean_title_col("title"))
-        .withColumn("selftext", F.coalesce("selftext", F.lit("")))  # P9
-        .withColumn("extracted_at", ts)
-    )
+        "has_selftext": F.coalesce(F.length("selftext") > 0, F.lit(False)),
+        "hour_posted": F.hour("created_utc").cast("long"),
+        "day_of_week": F.weekday("created_utc").cast("long"),  # Mon=0 (P5)
+        "engagement_rate": engagement_rate_col("num_comments", "score"),
+        "score_category": score_category_col("score"),
+        "title": clean_title_col("title"),  # P8, over the raw title
+        "selftext": F.coalesce("selftext", F.lit("")),  # P9
+        "extracted_at": ts,
+    })

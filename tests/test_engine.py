@@ -10,10 +10,11 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from reddit_etl_spark.analysis_sql import ANALYSIS_QUERIES
 from reddit_etl_spark.engine import Engine
-from reddit_etl_spark.plans.inspect import explain_str
+from reddit_etl_spark.plans.inspect import count_exchanges, explain_str
 from reddit_etl_spark.sinks.writers import append_parquet
-from tests.conftest import AS_OF, jobs_in_group
+from tests.conftest import AS_OF, canon_rows, jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -103,3 +104,65 @@ def test_engine_declared_schemas_equal_inferred(
         assert got.schema == inferred.schema
         assert got.exceptAll(inferred).isEmpty()
         assert inferred.exceptAll(got).isEmpty()
+
+
+def _engine_listed_with(spark, lake, conf: dict[str, str]) -> Engine:
+    """An Engine whose tables were listed with ``conf`` set, which
+    decides their partitioning; the session's values are restored
+    afterwards."""
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        eng = Engine(spark, str(lake / "posts"), str(lake / "comments"))
+        eng.posts, eng.comments
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    return eng
+
+
+_THRESHOLD_OFF = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+
+@pytest.mark.parametrize("name", ["q01", "q13", "q15"])
+def test_small_lake_plans_no_exchange(spark, lake, name):
+    """A lake below the bounds is read as one partition: the executed
+    plans of an aggregate, a date-filtered distinct count and a rank
+    window shuffle nothing."""
+    eng = _engine_listed_with(spark, lake, {})
+    assert eng.posts.rdd.getNumPartitions() == 1
+    df = eng.analysis(name, as_of=AS_OF)
+    assert df.collect()
+    assert count_exchanges(df) == 0, explain_str(df)
+
+
+@pytest.mark.parametrize("conf", [
+    _THRESHOLD_OFF,
+    {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "1b"},
+])
+def test_bound_off_reads_partitioned(spark, lake, conf):
+    """With the broadcast threshold at -1, or a minimum partition size
+    below the lake's, the tables keep their file partitions and the
+    aggregate shuffles again."""
+    eng = _engine_listed_with(spark, lake, conf)
+    assert eng.posts.rdd.getNumPartitions() > 1
+    df = eng.analysis("q01")
+    assert df.collect()
+    assert count_exchanges(df) > 0
+
+
+def test_one_partition_path_keeps_results(spark, lake):
+    """All fifteen analysis queries return the same rows (as multisets,
+    floats to 9 significant digits) on both paths. The one-partition
+    Engine registers its views last, so later tests see the default."""
+    shuffled = _engine_listed_with(spark, lake, _THRESHOLD_OFF)
+    want = {
+        name: canon_rows(shuffled.analysis(name, as_of=AS_OF).collect())
+        for name in sorted(ANALYSIS_QUERIES)
+    }
+    eng = _engine_listed_with(spark, lake, {})
+    for name in sorted(ANALYSIS_QUERIES):
+        got = canon_rows(eng.analysis(name, as_of=AS_OF).collect())
+        assert got == want[name], name
+        assert want[name], name

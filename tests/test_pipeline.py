@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 import random
+import re
 import time
 
 import pytest
@@ -618,6 +619,62 @@ def test_stream_stats_two_batches_match_batch_layout(spark, posts, tmp_path):
     _assert_one_file_per_subreddit(
         str(tmp_path / "stats"),
         {r.subreddit for r in want.select("subreddit").collect()},
+    )
+
+
+def _stream_work_per_batch(spark, query) -> dict[int, list[int]]:
+    """[jobs, shuffle rows written, shuffle rows read] per micro-batch
+    of a finished query, from the status store: a stream's jobs carry
+    its runId as job group and "batch = N" in their description."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    out: dict[int, list[int]] = {}
+    jobs = store.jobsList(None).iterator()
+    while jobs.hasNext():
+        job = jobs.next()
+        if not (job.jobGroup().isDefined()
+                and job.jobGroup().get() == str(query.runId)):
+            continue
+        batch = int(re.search(r"batch = (\d+)", job.description().get()).group(1))
+        work = out.setdefault(batch, [0, 0, 0])
+        work[0] += 1
+        stages = job.stageIds()
+        for i in range(stages.size()):
+            stage = store.lastStageAttempt(stages.apply(i))
+            work[1] += stage.shuffleWriteRecords()
+            work[2] += stage.shuffleReadRecords()
+    return out
+
+
+def test_stream_stats_evaluates_each_micro_batch_once(spark, posts, tmp_path):
+    """Each micro-batch runs its stateful aggregate once. The micro-batch
+    frame sits on the planned RDD, so a second action over it reuses
+    the shuffle but re-runs the state-store stage, reading the shuffle
+    output again; here it is read once. A batch with rows takes two
+    jobs (the aggregate, then the upsert of its collected rows); a
+    no-data batch (the watermark advancing) takes the aggregate's job
+    alone, which commits the state."""
+    src_dir = str(tmp_path / "in")
+    posts.coalesce(1).write.parquet(src_dir)
+    stream = spark.readStream.schema(posts.schema).parquet(src_dir)
+    q = stream_daily_subreddit_stats(
+        stream,
+        stats_path=str(tmp_path / "stats"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    rows_in = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+    assert rows_in[0] == posts.count()
+    work = _stream_work_per_batch(spark, q)
+    assert set(work) == set(rows_in)
+    assert work[0][1] > 0
+    for batch, (jobs, written, read) in work.items():
+        assert read == written, (batch, work)
+        assert jobs == (2 if rows_in[batch] else 1), (batch, work)
+    assert _stored_stats(spark, str(tmp_path / "stats")) == sorted(
+        tuple(r) for r in daily_subreddit_stats(posts).select(*_STATS_COLS).collect()
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from reddit_etl_spark.schemas import POSTS_RAW_SCHEMA, POSTS_SCHEMA
 from reddit_etl_spark.transform import (
     clean_title_col,
+    engagement_rate_col,
     score_category_col,
     transform_posts,
 )
@@ -134,3 +135,43 @@ def test_transform_is_shuffle_free(spark, posts_raw):
     # no Exchange in the optimized plan.
     plan = transform_posts(posts_raw)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def _chained_transform(df, extracted_at):
+    """The transform as a chain of ten ``withColumn`` calls, each
+    reading the previous step's columns: the sequencing the
+    one-projection form must reproduce."""
+    return (
+        df.withColumn("title_length", F.length("title").cast("long"))
+        .withColumn("selftext_length", F.length("selftext").cast("long"))
+        .withColumn(
+            "has_selftext", F.coalesce(F.length("selftext") > 0, F.lit(False))
+        )
+        .withColumn("hour_posted", F.hour("created_utc").cast("long"))
+        .withColumn("day_of_week", F.weekday("created_utc").cast("long"))
+        .withColumn("engagement_rate", engagement_rate_col("num_comments", "score"))
+        .withColumn("score_category", score_category_col("score"))
+        .withColumn("title", clean_title_col("title"))
+        .withColumn("selftext", F.coalesce("selftext", F.lit("")))
+        .withColumn("extracted_at", extracted_at)
+    )
+
+
+def test_one_projection_equals_withcolumn_chain(spark, posts_raw):
+    """Same schema (names, order, types) and the same rows as the
+    chain, on the fixture corpus plus rows with NULL selftext, NULL
+    score, NULL title and score -1."""
+    extra = [
+        ("t3_n1", None, "u", "Python", None, 0.5, 4,
+         dt.datetime(2025, 9, 7, 23, 59), None, "http://n", False, False,
+         False, False, False),
+        ("t3_n2", " Q? ", "u", "Python", -1, 0.5, 2,
+         dt.datetime(2025, 9, 1, 0, 0), "  ", "http://m", True, True,
+         True, True, True),
+    ]
+    raw = posts_raw.unionByName(spark.createDataFrame(extra, POSTS_RAW_SCHEMA))
+    ts = F.lit(dt.datetime(2025, 9, 1, 12, 0)).cast("timestamp")
+    got, want = transform_posts(raw, ts), _chained_transform(raw, ts)
+    assert got.schema == want.schema
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+    assert got.count() == raw.count()
