@@ -45,12 +45,19 @@ decision is made once per ``Engine``, when a table's files are first
 listed (the first use of ``posts`` or ``comments``); a lake that grows
 past the bound afterwards keeps one partition until a new ``Engine``
 is built.
+
+The views are the session's, not the ``Engine``'s: a second ``Engine``
+over the same session replaces them with its own tables. Each
+``Engine`` therefore registers its views again on its next ``sql`` or
+``analysis`` call once another ``Engine`` has registered in the
+session since, and only then.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import functools
+import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -59,6 +66,9 @@ from .analysis_sql import ANALYSIS_QUERIES
 from .schemas import COMMENTS_SCHEMA, POSTS_SCHEMA
 from .sources.reddit import comments_df
 from .stats import daily_subreddit_stats, write_subreddit_stats
+
+#: per session, the key of the ``Engine`` whose tables its views hold
+_VIEWS_OWNER: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 class Engine:
@@ -71,7 +81,8 @@ class Engine:
         self.spark = spark
         self._posts_path = posts_path
         self._comments_path = comments_path
-        self._registered = False
+        # a key of its own: an id() could be reused by a later Engine
+        self._views_key = object()
 
     @functools.cached_property
     def posts(self) -> DataFrame:
@@ -99,14 +110,14 @@ class Engine:
         return df.coalesce(1) if small else df
 
     def _ensure_views(self) -> None:
-        if not self._registered:
+        if _VIEWS_OWNER.get(self.spark) is not self._views_key:
             comments = (
                 self.comments
                 if self._comments_path is not None
                 else comments_df(self.spark, [])
             )
             q.register_views(self.posts, comments)
-            self._registered = True
+            _VIEWS_OWNER[self.spark] = self._views_key
 
     # --- the ad-hoc SQL path (SURVEY §3.3) ----------------------------
     def sql(self, statement: str) -> DataFrame:

@@ -10,6 +10,18 @@ driver harness — gets the same tuned session:
 - AQE on (runtime coalescing, skew-join splitting) — this is what makes
   the same plans survive a 100x scale-up without re-tuning.
 - Arrow on for the few pandas-UDF extension operators.
+- A codegen cache that holds the engine's working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark keeps each compiled class in a
+  JVM-global cache keyed by the generated source; its default bound of
+  100 is split over 4 independently evicting segments, 25 classes
+  each, while one pipeline batch and the fifteen analysis queries
+  compile 145 distinct classes, so a session that repeated them
+  recompiled ~140 of them on every round (SCALING.md, "Generated code
+  compiled once per session"). The setting is static, and Spark reads
+  it once per JVM, when the first class is compiled: a session not
+  built by ``get_spark`` (or built after another session already
+  compiled code in the same JVM) keeps the bound in force then,
+  Spark's 100 by default.
 - On a ``local`` master, Python workers fork from
   ``reddit_etl_spark.pyworker``, which stops each task from re-reading
   every zip archive on ``sys.path`` (SCALING.md, "The per-Python-task
@@ -25,6 +37,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: ``spark.sql.codegen.cache.maxEntries``: the measured working sets
+#: (145-225 classes per workload, 380 for all of them in one session)
+#: with room for the uneven fill of Guava's 4 segments, each of which
+#: evicts on its own at a quarter of the bound
+CODEGEN_CACHE_ENTRIES = 1000
 #: the directory holding the package, for the Python workers' path
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,6 +64,9 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

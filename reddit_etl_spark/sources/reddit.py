@@ -28,7 +28,8 @@ The lift keeps the list path's contract: a naive datetime is
 driver-local time and an aware one is converted to UTC (both exactly
 as ``TimestampType.toInternal``), a ``None`` in a non-nullable field
 raises ``ValueError``, extra dict keys are ignored and missing keys
-become NULL.
+become NULL. A posts batch also carries its extraction instant as a
+column (``posts_df``).
 
 PRAW itself is optional — import-gated, since the engine's query
 surface must work without network or credentials. ``MockRedditSource``
@@ -45,7 +46,7 @@ from typing import Any, Protocol
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from ..schemas import COMMENTS_SCHEMA, POSTS_RAW_SCHEMA
 
@@ -236,10 +237,27 @@ def _lift(
     return spark.createDataFrame(table, schema).coalesce(1)
 
 
+#: a lifted posts batch: the 15 connector fields, then the batch's
+#: extraction instant (never NULL, as ``current_timestamp()`` is not)
+_POSTS_BATCH_SCHEMA = StructType(
+    POSTS_RAW_SCHEMA.fields
+    + [StructField("extracted_at", TimestampType(), False)]
+)
+
+
 def posts_df(spark: SparkSession, records: Sequence[dict[str, Any]]) -> DataFrame:
     """Lift raw post records into the explicit 15-column schema —
-    never inferred (SURVEY §1.2)."""
-    return _lift(spark, records, POSTS_RAW_SCHEMA)
+    never inferred (SURVEY §1.2) — plus ``extracted_at``, one UTC
+    instant for the whole batch, taken here.
+
+    The instant travels as data, as comment records carry theirs, so
+    ``transform_posts`` reads it as a column: a per-batch literal (what
+    ``current_timestamp()`` folds into) would be inlined into the
+    transform's generated code, and every batch would compile that
+    class again."""
+    now = dt.datetime.now(dt.timezone.utc)
+    stamped = [{**r, "extracted_at": now} for r in records]
+    return _lift(spark, stamped, _POSTS_BATCH_SCHEMA)
 
 
 def comments_df(spark: SparkSession, records: Sequence[dict[str, Any]]) -> DataFrame:

@@ -472,19 +472,23 @@ def stream_hll_distinct_rollup(
     from ..sinks.versioned import read_versioned, versions, write_versioned
 
     def fold_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # one scan of the micro-batch: its per-group sketches (~2^lg_k
+        # bytes per group) come to the driver and the merge reads them
+        # from a local relation, so an emptiness check and the fold do
+        # not each scan the input; an empty batch has no groups
         spark = batch_df.sparkSession
-        batch_sk = hll_rollup(batch_df, group_cols, value_col, lg_k=lg_k)
+        batch_sk = hll_rollup(batch_df, group_cols, value_col, lg_k=lg_k).select(
+            *group_cols, "hll_sketch"
+        )
+        sketches = batch_sk.toArrow()
+        if sketches.num_rows == 0:
+            return
+        both = spark.createDataFrame(sketches, batch_sk.schema)
         if versions(state_path):
             prior = read_versioned(spark, state_path).select(
                 *group_cols, "hll_sketch"
             )
-            both = batch_sk.select(*group_cols, "hll_sketch").unionByName(
-                prior
-            )
-        else:
-            both = batch_sk.select(*group_cols, "hll_sketch")
+            both = both.unionByName(prior)
         merged = hll_merge_rollup(both, group_cols)
         write_versioned(merged, state_path, mode="overwrite")
 
@@ -522,6 +526,17 @@ def _mg_fold_batch(
     from ..operators.sketch import mg_partition_summaries
     from ..sinks.versioned import read_versioned, versions, write_versioned
 
+    # the batch's summary first: it is the fold's one scan of the
+    # micro-batch, and a batch with no (non-NULL) values leaves the
+    # state as it is, so nothing is committed for it
+    batch_rows = (
+        mg_partition_summaries(batch_df, value_col, capacity)
+        .groupBy(value_col)
+        .agg(F.sum("est_count").alias("est_count"))
+        .collect()
+    )
+    if not batch_rows:
+        return
     vs = versions(state_path)
     prior_rows: list = []
     if vs:
@@ -535,12 +550,6 @@ def _mg_fold_batch(
                 ).collect()
         else:
             prior_rows = latest_rows
-    batch_rows = (
-        mg_partition_summaries(batch_df, value_col, capacity)
-        .groupBy(value_col)
-        .agg(F.sum("est_count").alias("est_count"))
-        .collect()
-    )
     # merge + trim in plain Python: both inputs are bounded (state <=
     # capacity, batch summary <= partitions x capacity), so ONE
     # evaluation replaces the previous re-executed-per-action plan
@@ -592,8 +601,6 @@ def stream_heavy_hitters(
     qid = hashlib.md5(checkpoint_path.encode()).hexdigest()[:8]
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         _mg_fold_batch(
             batch_df.sparkSession, batch_df, value_col, capacity,
             state_path, f"{qid}-{batch_id}",

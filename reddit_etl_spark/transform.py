@@ -70,11 +70,29 @@ def transform_posts(df: DataFrame, extracted_at: Column | None = None) -> DataFr
     projection cleans title and back-fills selftext (P8, P9), the order
     the reference imposes by sequencing (script.py:198-217). Replaced
     columns keep their position and the derived ones follow in the
-    order below; one ``withColumns`` is one analysis on the driver,
-    where a ``withColumn`` chain re-analyses the plan per column.
+    order below, ``extracted_at`` last; one ``select`` is one analysis
+    on the driver, where a ``withColumn`` chain re-analyses the plan
+    per column.
+
+    ``extracted_at``: an explicit column wins; else the frame's own
+    ``extracted_at`` column, the batch instant ``posts_df`` lifts with
+    the records, is moved to the end; else ``current_timestamp()``.
+    Only the middle case keeps the generated code the same from batch
+    to batch: ``current_timestamp()`` (or an explicit literal) folds
+    into a timestamp literal, which whole-stage codegen inlines into
+    the projection's source, so each new instant compiles a new class.
     """
-    ts = extracted_at if extracted_at is not None else F.current_timestamp()
-    return df.withColumns({
+    columns = df.columns
+    if extracted_at is None:
+        extracted_at = (
+            F.col("extracted_at") if "extracted_at" in columns
+            else F.current_timestamp()
+        )
+    replaced = {
+        "title": clean_title_col("title"),  # P8, over the raw title
+        "selftext": F.coalesce("selftext", F.lit("")),  # P9
+    }
+    derived = {
         # lengths on RAW values (P1, P2)
         "title_length": F.length("title").cast("long"),
         "selftext_length": F.length("selftext").cast("long"),
@@ -84,7 +102,10 @@ def transform_posts(df: DataFrame, extracted_at: Column | None = None) -> DataFr
         "day_of_week": F.weekday("created_utc").cast("long"),  # Mon=0 (P5)
         "engagement_rate": engagement_rate_col("num_comments", "score"),
         "score_category": score_category_col("score"),
-        "title": clean_title_col("title"),  # P8, over the raw title
-        "selftext": F.coalesce("selftext", F.lit("")),  # P9
-        "extracted_at": ts,
-    })
+        "extracted_at": extracted_at,
+    }
+    return df.select(
+        *(replaced[c].alias(c) if c in replaced else c
+          for c in columns if c not in derived),
+        *(col.alias(name) for name, col in derived.items()),
+    )

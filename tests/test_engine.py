@@ -154,8 +154,7 @@ def test_bound_off_reads_partitioned(spark, lake, conf):
 
 def test_one_partition_path_keeps_results(spark, lake):
     """All fifteen analysis queries return the same rows (as multisets,
-    floats to 9 significant digits) on both paths. The one-partition
-    Engine registers its views last, so later tests see the default."""
+    floats to 9 significant digits) on both paths."""
     shuffled = _engine_listed_with(spark, lake, _THRESHOLD_OFF)
     want = {
         name: canon_rows(shuffled.analysis(name, as_of=AS_OF).collect())
@@ -166,3 +165,35 @@ def test_one_partition_path_keeps_results(spark, lake):
         got = canon_rows(eng.analysis(name, as_of=AS_OF).collect())
         assert got == want[name], name
         assert want[name], name
+
+
+def test_interleaved_engines_read_their_own_lakes(
+    spark, lake, posts, comments, tmp_path, monkeypatch
+):
+    """The views are session-global: two Engines over different lakes
+    that take turns each read their own lake, and an Engine registers
+    its views again only after the other one has registered."""
+    from reddit_etl_spark import engine as engine_mod
+
+    one = posts.filter(F.col("subreddit") == "Python")
+    append_parquet(one, str(tmp_path / "p"), partition_by=("subreddit",))
+    append_parquet(comments, str(tmp_path / "c"))
+    registered = []
+    register_views = engine_mod.q.register_views
+
+    def register(posts, comments):
+        registered.append(id(posts))
+        register_views(posts, comments)
+
+    monkeypatch.setattr(engine_mod.q, "register_views", register)
+    full = Engine(spark, str(lake / "posts"), str(lake / "comments"))
+    python = Engine(spark, str(tmp_path / "p"), str(tmp_path / "c"))
+
+    def subreddits(eng):
+        return sorted(r.subreddit for r in eng.analysis("q01").collect())
+
+    for _ in range(2):
+        assert subreddits(full) == ["MachineLearning", "Python", "datascience"]
+        assert subreddits(full) == ["MachineLearning", "Python", "datascience"]
+        assert subreddits(python) == ["Python"]
+    assert registered == [id(full.posts), id(python.posts)] * 2

@@ -13,8 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+from reddit_etl_spark.analysis_sql import ANALYSIS_QUERIES
+from reddit_etl_spark.engine import Engine
 from reddit_etl_spark.pipeline import run_pipeline, top_post_ids
-from reddit_etl_spark.schemas import SUBREDDIT_STATS_SCHEMA
+from reddit_etl_spark.schemas import POSTS_SCHEMA, SUBREDDIT_STATS_SCHEMA
+from reddit_etl_spark.session import CODEGEN_CACHE_ENTRIES
 from reddit_etl_spark.sinks.writers import append_parquet, upsert_partitioned
 from reddit_etl_spark.sources.reddit import (
     MockRedditSource,
@@ -28,6 +31,7 @@ from reddit_etl_spark.streaming.stats_stream import (
     stream_daily_subreddit_stats,
     windowed_event_rollup,
 )
+from reddit_etl_spark.transform import transform_posts
 from tests.conftest import jobs_in_group
 
 AS_OF = dt.date(2025, 9, 1)
@@ -215,6 +219,46 @@ def test_pipeline_batch_runs_at_most_three_jobs(spark, tmp_path):
     assert 0 < jobs <= 3
 
 
+def _compiled_classes(spark) -> int:
+    """Classes Spark has compiled in this JVM: one per codegen cache
+    miss, on the driver and (in local mode) in tasks."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_SOURCE_CODE_SIZE().getCount()
+
+
+def test_get_spark_sizes_codegen_cache(spark):
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_warm_round_compiles_no_class(spark, tmp_path):
+    """A pipeline batch into a fresh lake, then the fifteen analysis
+    queries over it, twice in one session: the second round finds every
+    generated class in the codegen cache. With Spark's default bound
+    (100 entries over 4 segments) the round's ~140 classes evict each
+    other, and a batch instant inlined as a literal made the
+    transform's class new for every batch."""
+    posts = _mock_posts()
+    src = MockRedditSource(posts, _mock_comments(posts))
+
+    def one_round(d):
+        paths = {t: str(d / t) for t in ("posts", "comments", "stats")}
+        (res,) = run_pipeline(
+            spark, src, ["python"], paths["posts"], paths["comments"],
+            paths["stats"],
+        )
+        assert not res.errors
+        eng = Engine(spark, paths["posts"], paths["comments"])
+        for name in sorted(ANALYSIS_QUERIES):
+            eng.analysis(name, as_of=AS_OF).collect()
+
+    one_round(tmp_path / "cold")
+    before = _compiled_classes(spark)
+    one_round(tmp_path / "warm")
+    assert _compiled_classes(spark) - before == 0
+
+
 _TS = TimestampType()
 _STAMPS = [
     dt.datetime(2025, 9, 1, 8, 30, 0, 123457, tzinfo=dt.timezone.utc),
@@ -255,6 +299,26 @@ def test_lift_timestamps_match_list_path(spark, monkeypatch, tz):
     finally:
         monkeypatch.undo()
         time.tzset()
+
+
+def test_posts_batch_carries_one_instant(spark):
+    """posts_df stamps the batch with one UTC instant, taken at the
+    lift; the transform keeps it as its last column, and an explicit
+    extracted_at wins."""
+    start = _TS.toInternal(dt.datetime.now(dt.timezone.utc))
+    lifted = posts_df(spark, _mock_posts())
+    end = _TS.toInternal(dt.datetime.now(dt.timezone.utc))
+    fixed = dt.datetime(2025, 9, 1, 12, tzinfo=dt.timezone.utc)
+    stamped = transform_posts(lifted)
+    explicit = transform_posts(lifted, F.lit(fixed))
+
+    def stamps(df):
+        return {r[0] for r in df.selectExpr("unix_micros(extracted_at)").collect()}
+
+    assert stamped.columns == explicit.columns == POSTS_SCHEMA.names
+    (stamp,) = stamps(stamped)
+    assert start <= stamp <= end
+    assert stamps(explicit) == {_TS.toInternal(fixed)}
 
 
 def test_lift_keys_and_nullability(spark):

@@ -399,6 +399,13 @@ def test_streaming_sessions_late_chain_merges_transitively(spark, tmp_path):
     assert (cnt, tot) == (4, 4.0) and end == base + dt.timedelta(minutes=3)
 
 
+def _rows_in(query) -> list[int]:
+    """Input rows per micro-batch with data, as progress reports them."""
+    return sorted(
+        p["numInputRows"] for p in query.recentProgress if p["numInputRows"]
+    )
+
+
 def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     """Chopping the stream into micro-batches must not change the
     final sketch state: HLL union is register-wise max (associative,
@@ -434,6 +441,8 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
     from reddit_etl_spark.sinks.versioned import read_versioned, versions
 
+    # each micro-batch is scanned once: its input rows are the file's
+    assert _rows_in(q) == sorted(len(rows[j::3]) for j in range(3))
     # three micro-batches -> three committed versions (auditable)
     assert len(versions(state)) == 3
     got = {
@@ -475,6 +484,7 @@ def test_streaming_heavy_hitters_keeps_mg_guarantee(spark, tmp_path):
         str(tmp_path / "hh_ckpt"), capacity=8, available_now=True,
     )
     q.awaitTermination(120)
+    assert _rows_in(q) == sorted(len(vals[j::3]) for j in range(3))
     got = {
         r["v"]: r["est_count"]
         for r in read_versioned(spark, str(tmp_path / "hh_state")).collect()
