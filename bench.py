@@ -1,137 +1,51 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Runs every registry query flagged ``headline`` (the representative mix:
-scans, joins, window, correlation, dedup, similarity, text profile,
-windowed events) on local[$SPARK_GRAFT_CPUS], forcing full execution
-with a count-collect, and prints ONE COMPACT JSON line:
+Runs every registry query flagged ``headline`` (24 queries: scans,
+joins, window, correlation, dedup, similarity, text profile, windowed
+events) on a ``get_spark`` session at local[$SPARK_GRAFT_CPUS],
+forcing full execution with ``count()``, and prints ONE compact JSON
+line on stdout:
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q01_overview": sec, ...}, "n": 5, "stat": "median",
-     "sf": 0.1}
+    {"metric": "headline_queries_total", "value": <total_sec>,
+     "unit": "sec", "queries": {"q01_overview": sec, ...},
+     "best": {...}, "n": 5, "stat": "median", "sf": 0.1,
+     "calib": {"numpy_ms": ..., "shuffle_ms": ..., "par256_ms": ...},
+     "master": "local[N]", "default_parallelism": N}
 
-The full per-rep detail (sorted ``runs`` arrays + ``best`` per query +
-round-13's ``rep_stages`` — per-rep dominant-stage executor-run ms /
-shuffle-read MB / task count from the AppStatusStore, in rep order
-with wall times, so a slow rep is attributable to a stage vs host
-phase without another round of archaeology)
-is written to ``BENCH_DETAIL.json`` next to this file (override with
-$SPARK_GRAFT_BENCH_DETAIL), NOT printed: the driver captures a bounded
-tail of stdout, and round 4's detail-laden single line outgrew that
-window — the driver recorded ``parsed: null`` (VERDICT r4 finding #1).
-The stdout line carries only what the round record needs; the committed
-detail file carries the rest.
+Only a bounded tail of stdout is recorded, so the line stays compact
+(asserted under 4096 characters). The detail goes to
+``BENCH_DETAIL.json`` next to this file (override with
+$SPARK_GRAFT_BENCH_DETAIL): the sorted ``runs`` of each query, and
+``rep_stages``, each timed rep's wall time with its dominant stage's
+executor-run ms, shuffle-read MB and task count from the
+AppStatusStore, in rep order. Progress and warnings go to stderr.
 
-A warmup pass on the smallest table absorbs JVM/session startup so the
-per-query numbers measure the plans, not the JIT. The FIRST measured
-query additionally gets one untimed throwaway rep: r3/r4 showed the
-first query position absorbing residual costs the generic warmup
-misses (q01 medians swung 0.35->0.52 s with identical plans,
-VERDICT r4 finding #2), so position is neutralized explicitly.
+Method:
 
-Round-12 methodology change (VERDICT r11 #1 — the unexplained +35%
-headline regression): the per-rep ``System.gc()`` is GONE; between
-reps only the blocking unpersist sweep runs (the actual r10 leak
-fix), and the GC cycle moved to between QUERIES (absorbed by the next
-query's untimed throwaway). Evidence from two same-session A/Bs
-(round-12 one-off harness A/Bs, since retired): (a) the r11 discipline
-(sweep+gc per rep) vs cleanup-between-queries-only ran 13.987 vs
-12.902 s (+8.4%) with dedup_ngram_jaccard at +72% (2.723 vs 1.585 s);
-(b) isolating the gc — sweep+gc vs sweep-only vs nothing per rep —
-showed the gc itself costs 10-32% per query (text_profile 0.306 vs
-0.232 vs 0.231; curation 0.908 vs 0.753 vs 0.678; minhash 1.277 vs
-1.137 vs 1.131) while sweep-only matches nothing within noise. So the
-r11 regression decomposes into ~8-20% self-inflicted per-rep full-GC
-cost (a G1 cycle immediately before every timed rep spills concurrent
-phases into it) + machine phase (the same code measured numpy calibs
-of 335.4 and 66.3 ms within one hour this round; the builder's 9.107 s
-vs the driver's 13.825 s r11 gap is that phase, not plans). The sweep
-stays per-rep because it is what kills the leaked-localCheckpoint
-accumulation (r10 evidence below); the gc adds nothing the sweep
-doesn't already do synchronously.
+- A warm-up on the smallest table (a shuffle and a ``mapInPandas``)
+  absorbs session, JIT and Python-worker start-up.
+- Queries run in alphabetical order, so a query's position does not
+  move when the registry changes.
+- Each query gets one untimed throwaway rep (its own codegen and
+  first-touch I/O), then 5 timed reps; the median is reported, the
+  best alongside. A query whose median is under 0.6 s, or whose
+  max/best spread exceeds 2x, gets 4 more reps (median of 9).
+- Between reps, every still-registered persistent RDD is a leaked
+  ``localCheckpoint`` block of a dedup operator, and is unpersisted
+  with ``blocking=True``. The JVM's ``System.gc()`` runs once between
+  queries, where the next query's throwaway absorbs its churn, never
+  right before a timed rep.
+- Self-check: a query whose max/best spread exceeds 2x, or whose
+  median moved more than 25 % against the newest committed
+  ``BENCH_r*.json`` of a closed round ($SPARK_GRAFT_BENCH_PREV
+  overrides), prints a ``# WARN`` line.
+- Calibration, after the queries: a single-thread numpy matmul, a
+  fixed 32-task shuffle and a CPU-bound 256-task aggregate
+  (``par256_ms``, the one whose wall depends on the core count)
+  record the host's state, since its throughput swings several-fold
+  within an hour.
 
-Round-14 additions (judge r13 #2 — the driver flagged
-``suspect_cpus_ignored`` because every 8-vs-32-core query ratio was ≈1;
-the env var IS honored, but sf0.1's 13-54 ms dominant stages under a
-~450 ms shuffle round-trip make every query scheduling-latency-bound,
-so core count cannot show in their walls): the one-line JSON now
-carries ``master`` and ``default_parallelism`` (proof of which session
-the numbers came from) and a third calib entry ``par256_ms`` — a fixed
-CPU-bound 256-task aggregate whose wall IS core-sensitive (measured
-~1.3-2x between local[8] and local[32] on this host, vs ≈1.0 for the
-scheduling-bound query walls), so the driver can separate "env
-ignored" from "workload too small". No existing query,
-field, or methodology changed; the timed action and medians remain
-directly comparable to r13.
-
-Round-13 set change: ``hoeffding_d_lineitem`` joins the headline mix
-(the guarded cells² dominance-join shape gets a continuously-watched
-wall-time, as round 12 did for wasserstein), and ``bws_click_error``
-joins with wave 2 (the prefix-lane + chunked map-side k-explode shape
-is new this round) — 24 queries; totals are NOT comparable to r12's
-22-query total without subtracting the two medians.
-
-Round-13 telemetry payoff, first use: the committed r13 detail's
-``dedup_minhash_lsh`` WARN (median 1.29x of r12) adjudicates in one
-read — runs tight (spread 1.10x, no bimodality), dominant-stage
-shuffle CONSTANT at 0.851 MB / 32 tasks, but dominant-stage executor
-CPU swinging 9.6 -> 18.2 s across reps: the host's multi-core compute
-phase on the Arrow kernel, not a plan or leak (the single-thread numpy
-calib, 52.5 ms, was FAST the same session — the phase hits threaded
-compute, which is why wall-only records kept misattributing it).
-
-Round-12 set change: ``wasserstein_click_error`` joins the headline
-mix (judge r11 #7 — the guarded distinct-value single-partition
-window lane gets a continuously-watched wall-time) — totals are NOT
-comparable to r11's 21-query total without subtracting its median;
-per-query medians remain directly comparable, EXCEPT
-``jonckheere_priority_value`` whose plan was rewritten 12 → 4
-exchanges this round (the -35% there is the plan, not the machine).
-
-Round-12 self-check (VERDICT r11 #8): after the run, any query whose
-max/best spread exceeds 2x or whose median moved >25% vs the committed
-previous BENCH_r*.json emits a ``# WARN`` line in the tail, so spread/
-median regressions surface in the artifact itself.
-
-Round-10 methodology changes (VERDICT r9 #3/#4/#7): (a) the between-
-rep cleanup is now a SYNCHRONOUS blocking unpersist of every leaked
-localCheckpoint RDD + gc, replacing the gc-only nudge whose async
-ContextCleaner raced the next timed rep (the r9 minhash 7.12 s tail;
-measured fix evidence inline at ``drop_leaked_blocks``); (b) the
-headline stdout line now carries per-query ``best`` alongside the
-median — the r9 median-vs-best gap is what separated sandbox noise
-from regression; (c) the r9 ``asof_attribution`` anomaly is
-adjudicated machine-phase with instrumented evidence (inline note).
-
-Round-8 methodology changes (VERDICT r7 #6 — q01/q09 medians drifted
-+26%/+30% over two rounds with unchanged plans): (a) the run order is
-now pinned ALPHABETICALLY instead of following ``registry()`` order —
-registry order changes with every round's head rotation, so each
-query's position (and its page-cache/GC neighborhood) silently moved
-between rounds; (b) queries whose 5-rep median lands under
-``_EXTRA_REP_CUTOFF`` get 4 extra reps (median of 9) — the sub-second
-queries are exactly where a single scheduler stall moves the median,
-and exactly where extra reps are cheap. Medians stay comparable
-round-over-round; only their stability improves.
-
-Round-7 set change: ``tpch_q21_waiting_supplier`` (the round's
-heaviest relational shape — SEMI+ANTI self-join chain over distinct
-pairs) joins the headline mix — totals are NOT comparable to r6's
-19-query total without subtracting its median; per-query medians
-remain directly comparable.
-
-Round-6 set change: ``segment_dedup_docs`` (the round's flagship
-corpus-rewrite operator) joins the headline mix — totals are NOT
-comparable to r5's 18-query total without subtracting its median;
-per-query medians remain directly comparable.
-
-Round-5 additions: (a) a JVM GC nudge between reps — leaked
-localCheckpoint blocks from the dedup operators otherwise accumulate
-in the shared local-mode heap and the medians start measuring
-storage-eviction churn instead of plans (see the inline comment for
-measured evidence); (b) a ``calib`` field (fixed numpy matmul +
-fixed 32-task shuffle) recording machine state alongside the
-timings, because this virtualized host's throughput was observed to
-swing >10x between identical runs within the hour.
+How this method came about, round by round, is in CHANGES.md.
 """
 
 from __future__ import annotations

@@ -7,12 +7,14 @@ import datetime as dt
 import os
 import random
 import re
+import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+from reddit_etl_spark import pipeline
 from reddit_etl_spark.analysis_sql import ANALYSIS_QUERIES
 from reddit_etl_spark.engine import Engine
 from reddit_etl_spark.pipeline import run_pipeline, top_post_ids
@@ -203,20 +205,153 @@ def test_pipeline_counts_match_lake(spark, tmp_path):
 
 def test_pipeline_batch_runs_at_most_three_jobs(spark, tmp_path):
     """One batch: the posts write, the comments write and the stats
-    upsert, nothing else."""
+    upsert, nothing else. The loads run on their own threads, and all
+    three jobs still carry the caller's job group, description and
+    scheduler pool."""
     posts = _mock_posts()
     src = MockRedditSource(posts, _mock_comments(posts))
+    sc = spark.sparkContext
+    group = "test-pipeline-batch-jobs"
     results = []
-    jobs = jobs_in_group(spark, "test-pipeline-batch-jobs", lambda: results.extend(
-        run_pipeline(
-            spark, src, ["python"], str(tmp_path / "posts"),
-            str(tmp_path / "comments"), str(tmp_path / "stats"),
-            as_of=F.lit(AS_OF),
-        )
-    ))
+
+    def run():
+        sc.setJobDescription("pipeline batch")
+        sc.setLocalProperty("spark.scheduler.pool", "batch-pool")
+        try:
+            results.extend(run_pipeline(
+                spark, src, ["python"], str(tmp_path / "posts"),
+                str(tmp_path / "comments"), str(tmp_path / "stats"),
+                as_of=F.lit(AS_OF),
+            ))
+        finally:
+            sc.setJobDescription(None)
+            sc.setLocalProperty("spark.scheduler.pool", None)
+
+    jobs = jobs_in_group(spark, group, run)
     (res,) = results
     assert not res.errors and res.comments_loaded > 0
-    assert 0 < jobs <= 3
+    assert jobs == 3
+    store = sc._jsc.sc().statusStore()
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        job = store.job(jid)
+        assert job.description().get() == "pipeline batch"
+        sids = job.stageIds()
+        for i in range(sids.size()):
+            stage = store.stageData(sids.apply(i), False, None, False, None)
+            assert stage.apply(0).schedulingPool() == "batch-pool"
+
+
+def _batch_paths(tmp_path) -> dict[str, str]:
+    return {t: str(tmp_path / t) for t in ("posts", "comments", "stats")}
+
+
+def _run_batch(spark, paths, timeout_s=120.0):
+    """``run_pipeline`` for the mock ``python`` batch, from a helper
+    thread that must return within ``timeout_s``. Returns its result
+    and the threads it left running."""
+    posts = _mock_posts()
+    src = MockRedditSource(posts, _mock_comments(posts))
+    before = set(threading.enumerate())
+    out = []
+    caller = threading.Thread(target=lambda: out.extend(run_pipeline(
+        spark, src, ["python"], paths["posts"], paths["comments"],
+        paths["stats"], top_n_for_comments=4, comments_limit=2,
+        as_of=F.lit(AS_OF),
+    )), daemon=True)  # a hung batch must not hold the test process open
+    caller.start()
+    caller.join(timeout_s)
+    assert not caller.is_alive(), f"run_pipeline ran past {timeout_s} s"
+    (res,) = out
+    return res, set(threading.enumerate()) - before
+
+
+def _lake_counts(spark, paths) -> dict[str, int]:
+    return {
+        t: spark.read.parquet(p).count() if os.path.isdir(p) else 0
+        for t, p in paths.items()
+    }
+
+
+def test_pipeline_failed_posts_load_keeps_the_other_loads(
+    spark, tmp_path, monkeypatch
+):
+    """The loads commit or fail on their own: a failing posts append
+    leaves the comments and the stats in the lake, reports one error,
+    and every count equals what the lake holds."""
+    real = pipeline.append_parquet
+
+    def append(df, path, partition_by=()):
+        if path == paths["posts"]:
+            raise RuntimeError("injected posts failure")
+        real(df, path, partition_by)
+
+    paths = _batch_paths(tmp_path)
+    monkeypatch.setattr(pipeline, "append_parquet", append)
+    res, left = _run_batch(spark, paths)
+    assert not left
+    assert len(res.errors) == 1 and "injected posts failure" in res.errors[0]
+    lake = _lake_counts(spark, paths)
+    assert res.posts_loaded == lake["posts"] == 0
+    assert res.comments_loaded == lake["comments"] == 4 * 2
+    assert res.stats_rows == lake["stats"] == 1
+
+
+def test_pipeline_failed_upsert_returns_without_stats_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A failing upsert runs no action, so its Observation is never
+    filled; the batch still returns, with stats_rows 0 and the posts
+    and comments committed."""
+
+    def upsert(stats, path, subreddits=None):
+        raise RuntimeError("injected upsert failure")
+
+    paths = _batch_paths(tmp_path)
+    monkeypatch.setattr(pipeline, "write_subreddit_stats", upsert)
+    res, left = _run_batch(spark, paths)
+    assert not left
+    assert len(res.errors) == 1 and "injected upsert failure" in res.errors[0]
+    lake = _lake_counts(spark, paths)
+    assert res.stats_rows == lake["stats"] == 0
+    assert res.posts_loaded == lake["posts"] == 12
+    assert res.comments_loaded == lake["comments"] == 4 * 2
+
+
+def test_pipeline_loads_overlap(spark, tmp_path, monkeypatch):
+    """The posts append waits for the stats upsert to start: run one
+    after the other, the append would time out before the upsert
+    began."""
+    started = threading.Event()
+    real_append = pipeline.append_parquet
+    real_upsert = pipeline.write_subreddit_stats
+
+    def append(df, path, partition_by=()):
+        if path == paths["posts"] and not started.wait(60):
+            raise TimeoutError("posts append ran before the upsert started")
+        real_append(df, path, partition_by)
+
+    def upsert(stats, path, subreddits=None):
+        started.set()
+        real_upsert(stats, path, subreddits)
+
+    paths = _batch_paths(tmp_path)
+    monkeypatch.setattr(pipeline, "append_parquet", append)
+    monkeypatch.setattr(pipeline, "write_subreddit_stats", upsert)
+    res, left = _run_batch(spark, paths)
+    assert not left and not res.errors
+    lake = _lake_counts(spark, paths)
+    assert (res.posts_loaded, res.comments_loaded, res.stats_rows) == (
+        lake["posts"], lake["comments"], lake["stats"]) == (12, 8, 1)
+
+
+def test_pipeline_refuses_a_shared_path(spark, tmp_path):
+    """The loads of a batch run at once, and two appends to one path
+    share its committer's _temporary directory."""
+    src = MockRedditSource(_mock_posts())
+    p = str(tmp_path / "lake")
+    with pytest.raises(ValueError, match="three different paths"):
+        run_pipeline(spark, src, ["python"], p, p, str(tmp_path / "stats"))
+    assert not os.path.exists(p)
 
 
 def _compiled_classes(spark) -> int:
