@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.relational import argmax_per_group, rank_in_group, tier_col
+from ..operators.util import app_memo
 from ..operators.util import round6_floor  # noqa: F401  (re-export)
 from ..session import ensure_nanos_as_long, ensure_utc
 
@@ -51,38 +52,27 @@ TABLES = [
 ]
 
 
-#: parquet-schema memo, keyed per (Spark application, file path) —
-#: round-13 optimization (guide §1.2): schema inference costs one
-#: driver-side footer-read JOB (~100-180 ms here) on EVERY
-#: ``spark.read.parquet`` call, and every query builder re-reads its
-#: tables on every bench rep. The first read per (app, path) infers;
-#: later reads pass the inferred schema explicitly (jobs=0). Metadata
-#: only — never rows or results — and keyed by applicationId like the
-#: _EXACT_TOPK_CACHE so a new session re-infers from the files.
-#:
-#: STATIC-INPUT ASSUMPTION (advisor r13): a path OVERWRITTEN within
-#: one application with a DIFFERENT schema would have the cached
-#: schema force-applied (misread or analysis error), and table_rows
-#: below would return the old count. That is the declared contract of
-#: every per-application memo in this repo (prefix-choice, fan-out,
-#: lane, hoeffding probes): testdata inputs are immutable for the
-#: life of an application; a new session always re-derives from the
-#: files. Unlike the plan-shape memos this one affects a READ, so the
-#: assumption is stated here at the single load() chokepoint rather
-#: than per call site.
-_SCHEMA_CACHE: dict = {}
+def _file_stamp(spark: SparkSession, path: str) -> tuple:
+    """``app_memo`` key for a table: its path with the length and
+    modification time of one Hadoop ``FileStatus`` (no Spark job).
+    Spark's overwrite and append both change a table directory's
+    mtime, so a table rewritten in place is read afresh."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    st = fs.getFileStatus(jpath)
+    return path, st.getLen(), st.getModificationTime()
 
 
 def _read_memo(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        for stale in [k for k in _SCHEMA_CACHE if k[0] != key[0]]:
-            _SCHEMA_CACHE.pop(stale)
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    """Read parquet with the schema inferred once per table version:
+    inference costs a footer-read job (~100-180 ms) on every plain
+    ``spark.read.parquet``, and builders re-read their tables on every
+    rep."""
+    schema = app_memo(
+        spark, "schema", lambda: _file_stamp(spark, path),
+        lambda: spark.read.parquet(path).schema,
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -93,23 +83,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_memo(spark, f"{sf_dir}/{name}.parquet")
 
 
-#: table row-count memo, same keying/eviction as _SCHEMA_CACHE — for
-#: builders whose PLAN SHAPE derives from the table size (IVF centroid
-#: count = sqrt(N)). The count is deterministic for a fixed file set,
-#: so reusing it within an application changes no result; it is a
-#: plan-shape scalar (the blessed auto-lane probe class), never rows.
-_COUNT_CACHE: dict = {}
-
-
 def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    key = (spark.sparkContext.applicationId, f"{sf_dir}/{name}")
-    n = _COUNT_CACHE.get(key)
-    if n is None:
-        for stale in [k for k in _COUNT_CACHE if k[0] != key[0]]:
-            _COUNT_CACHE.pop(stale)
-        n = load(spark, sf_dir, name).count()
-        _COUNT_CACHE[key] = n
-    return n
+    """Row count of a table, for builders whose plan SHAPE derives
+    from the table size (IVF centroid count = sqrt(N)); one count job
+    per table version."""
+    path = f"{sf_dir}/{name}.parquet"
+    return app_memo(
+        spark, "rows", lambda: _file_stamp(spark, path),
+        lambda: load(spark, sf_dir, name).count(),
+    )
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

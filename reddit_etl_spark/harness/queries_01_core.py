@@ -752,8 +752,7 @@ def similarity_topk_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    # plan-shape row count via the (app, path)-keyed memo — one job
-    # per session instead of one per rep (round-13 opt)
+    # plan-shape row count, one job per table version (app_memo)
     n = table_rows(spark, sf_dir, "embeddings")
     nc = max(4, int(n**0.5))
     exact = _exact_topk(spark, sf_dir)
@@ -786,8 +785,7 @@ def similarity_topk_ivf_indexed_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    # plan-shape row count via the (app, path)-keyed memo — one job
-    # per session instead of one per rep (round-13 opt)
+    # plan-shape row count, one job per table version (app_memo)
     n = table_rows(spark, sf_dir, "embeddings")
     nc = max(4, int(n**0.5))
     cents, assigns = build_ivf_index(

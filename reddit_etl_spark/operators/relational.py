@@ -29,6 +29,7 @@ from .scale_lanes import (
     resolve_lane,
     two_pass_prefix,
 )
+from .util import app_memo, plan_key
 
 
 def argmax_per_group(
@@ -6000,8 +6001,8 @@ def wasserstein_distance(
       the reduced frame + P parallel sorts; same exact integers, so
       identical output (parity pytest-pinned).
     - ``"auto"`` (default since round 14): count-then-branch at
-      ``TWO_PASS_MIN_ROWS``, memoized per (application, plan hash) —
-      ``scale_lanes.resolve_lane`` — so a session that rebuilds the
+      ``TWO_PASS_MIN_ROWS``, kept by ``util.app_memo`` on the plan
+      (``scale_lanes.resolve_lane``), so a session that rebuilds the
       same query pays the probe once, not per action.
 
     Returns one row: (n_a BIGINT, n_b BIGINT, wasserstein) — NULL
@@ -9815,41 +9816,6 @@ def kuiper_two_sample(
 #: old hard-refusal max_cells, which this lane RETIRES.
 _HOEFFDING_SWEEP_MIN_CELLS = 10_000
 
-#: plan-choice memo for the hoeffding lane probe, keyed by
-#: (applicationId, unanalyzed-plan semanticHash of the cell aggregate)
-#: — the scale_lanes.resolve_lane contract: the probe is one eager
-#: count over the reduced cell frame, both lanes are result-identical
-#: (parity-tested), only the CHOICE is reused, rows always recompute.
-#: The plan hash covers every upstream filter and projection, so a
-#: filtered call never replays its count for the unfiltered frame; a
-#: path rewritten in place within one application can still replay
-#: the original count, and the join lane's plan-embedded guard then
-#: refuses loudly.
-_HOEFFDING_LANE_MEMO: dict = {}
-
-
-def _memo_hoeffding_cells(grid, cells) -> int:
-    """Distinct-cell count of ``cells`` (the checkpointed form of
-    ``grid``), memoized on ``grid``'s plan: the checkpoint's own plan
-    is a fresh RDD leaf per build and would never hit."""
-    sc = grid.sparkSession.sparkContext
-    try:
-        key = (
-            sc.applicationId,
-            grid._jdf.queryExecution().logical().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 - fall through to the live probe
-        key = None
-    if key and key in _HOEFFDING_LANE_MEMO:
-        return _HOEFFDING_LANE_MEMO[key]
-    n = cells.count()
-    if key:
-        for stale in [k for k in _HOEFFDING_LANE_MEMO if k[0] != key[0]]:
-            _HOEFFDING_LANE_MEMO.pop(stale)
-        _HOEFFDING_LANE_MEMO[key] = n
-    return n
-
-
 def _hoeffding_dominance_sweep(iterator):
     """Single-task mapInArrow body: exact dominance/marginal counts
     for every (x, y, f) cell — the sort-based replacement for the
@@ -9970,7 +9936,8 @@ def hoeffding_d(
 
     Plan at scale (round-14 lane split, judge r13 #4): one (x, y)
     cell aggregate; the dominance counts come from one of two
-    RESULT-IDENTICAL lanes picked by a memoized cell-count probe —
+    RESULT-IDENTICAL lanes picked by a cell-count probe (kept by
+    ``util.app_memo`` on the cell aggregate's plan) —
     at/below ``_HOEFFDING_SWEEP_MIN_CELLS`` the original cells×cells
     join (distributed codegen wins when C² is small), above it a
     single-task Arrow sweep (exact marginal cumsums + a Fenwick tree
@@ -9997,12 +9964,15 @@ def hoeffding_d(
     # one lazy localCheckpoint collapses them to ONE fact pass
     cells = grid.localCheckpoint(eager=False)
     # Round-14 lane choice (judge r13 #4, guide §3): see the "Plan at
-    # scale" docstring block. The eager probe is memoized per
-    # (applicationId, cell-plan semanticHash); the join lane keeps a
-    # plan-embedded guard AT the cut-over so a stale memo on mutated
+    # scale" docstring block. The eager probe is kept by app_memo on
+    # the cell aggregate's plan (the checkpoint's own plan is a fresh
+    # RDD leaf per build and would never hit); the join lane keeps a
+    # plan-embedded guard AT the cut-over so a stale count on mutated
     # files refuses loudly (the old behaviour); the sweep lane is
     # guarded by max_cells.
-    probed = _memo_hoeffding_cells(grid, cells)
+    probed = app_memo(
+        grid.sparkSession, "hoeffding", lambda: plan_key(grid), cells.count
+    )
     use_sweep = probed > _HOEFFDING_SWEEP_MIN_CELLS
     # the caller's max_cells stays the binding refusal on BOTH lanes;
     # the join lane additionally refuses at the cut-over (a stale memo

@@ -286,54 +286,24 @@ def two_pass_prefix(frame, order_col, sum_cols, num_parts=64):
     return out.drop(*drop)
 
 
-#: resolve_lane memo, keyed by (applicationId, semanticHash of the
-#: reduced frame's analyzed plan) — the round-13 memo contract (see
-#: dedup._memo_prefix_choice): only the lane CHOICE is reused, never
-#: rows; the semantic hash distinguishes every (source, column,
-#: scale, filter) combination within an application, identical
-#: rebuilds of the same query hit the memo, and a file REWRITTEN in
-#: place mid-application replays the original (still lossless —
-#: both lanes are parity-tested result-identical) decision.
-_AUTO_LANE_MEMO: dict = {}
-
-
 def resolve_lane(lane: str, per_v) -> str:
     """Resolve ``lane='auto'`` for the exact-rank prefix family:
     count the reduced distinct-value frame once and branch at
     ``TWO_PASS_MIN_ROWS`` (round 12's measured single-task-window
-    cliff), memoized per (applicationId, analyzed-plan semantic
-    hash) so a bench/driver session that rebuilds the same query
-    pays the probe job once, not per rep (judge r13 #5 — the probe
-    cost was why the 'single' default survived two rounds).
+    cliff). The choice is kept by ``app_memo`` on the frame's plan
+    (``plan_key``), so a session that rebuilds the same query pays the
+    ~690 ms probe job once, not per rep; both lanes are parity-tested
+    result-identical.
 
     Explicit ``'single'``/``'two_pass'`` pass through untouched —
     the documented escape hatches (SCALING.md).
     """
+    from .util import app_memo, plan_key
+
     if lane != "auto":
         return lane
-    spark = per_v.sparkSession
-    key = None
-    try:
-        # the UNANALYZED plan's semantic hash: no subtree analysis on
-        # the memo-hit path (measured 40 ms vs 135 ms for analyzed()
-        # vs ~690 ms for the count job itself, per fresh build on
-        # this host). Identical rebuilds hash identically; different
-        # sources/expressions differ (the scan leaf carries the
-        # concrete file relation). A collision could only mis-pick
-        # the LANE — both lanes are result-identical, so this stays
-        # plan-shape-only either way.
-        key = (
-            spark.sparkContext.applicationId,
-            per_v._jdf.queryExecution().logical().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 - fall through to the live probe
-        key = None
-    if key and key in _AUTO_LANE_MEMO:
-        return _AUTO_LANE_MEMO[key]
-    n = per_v.count()
-    choice = "two_pass" if n > TWO_PASS_MIN_ROWS else "single"
-    if key:
-        for stale in [k for k in _AUTO_LANE_MEMO if k[0] != key[0]]:
-            _AUTO_LANE_MEMO.pop(stale)
-        _AUTO_LANE_MEMO[key] = choice
-    return choice
+
+    def probe():
+        return "two_pass" if per_v.count() > TWO_PASS_MIN_ROWS else "single"
+
+    return app_memo(per_v.sparkSession, "lane", lambda: plan_key(per_v), probe)

@@ -7,15 +7,68 @@ import re
 from pyspark.sql import DataFrame
 
 
-#: scan-partition-count memo keyed by (applicationId, input file set)
-#: — round-13 optimization: the ``df.rdd.getNumPartitions()`` probe
-#: forces full analysis + physical planning + RDD conversion of a
-#: FRESH DataFrame (~50-125 ms driver-side) on every operator build;
-#: the answer depends only on the scanned files and the session's
-#: split size, so it is stable per application. In-memory frames
-#: (``inputFiles() == ()``) are never memoized — their partitioning
-#: is not file-derived.
-_FANOUT_MEMO: dict = {}
+#: every per-application memo entry, keyed (applicationId, tag, key)
+_MEMO: dict = {}
+_MISS = object()
+
+
+def app_memo(spark, tag: str, key, compute, store=None):
+    """Return ``compute()``, reusing the answer kept for ``key()``
+    earlier in this Spark application: the one memo for plan choices
+    and table metadata.
+
+    Builders re-run probes whose answers cost a Spark job or a planning
+    pass (a count, a blowup aggregate, schema inference) every time a
+    query is rebuilt, and the answer depends only on what the key
+    names. The contract:
+
+    - Only plan-shaping scalars and table metadata are kept, never
+      rows. ``tag`` names the site, so two sites never share an entry.
+    - ``key`` is a zero-argument callable. If it raises or returns
+      ``None``, the answer is computed live and nothing is kept.
+    - ``store(value)``, when given, decides whether a computed answer
+      is kept; a refused answer is still returned.
+    - Entries belong to one ``applicationId``. Keeping a new entry
+      drops every other application's, so a new session derives each
+      answer again and a stopped one's entries do not accumulate.
+    - A key names its input by plan or by file set. Unless it also
+      carries the files' stamp (``_file_stamp`` in the harness), a
+      file rewritten in place within one application replays the
+      earlier answer; every plan-choice site keeps that lossless,
+      because the plans it chooses between return identical rows.
+    """
+    try:
+        k = key()
+    except Exception:  # noqa: BLE001 - an unkeyable input computes live
+        k = None
+    if k is None:
+        return compute()
+    app = spark.sparkContext.applicationId
+    entry = (app, tag, k)
+    value = _MEMO.get(entry, _MISS)
+    if value is _MISS:
+        value = compute()
+        if store is None or store(value):
+            for stale in [e for e in list(_MEMO) if e[0] != app]:
+                _MEMO.pop(stale, None)
+            _MEMO[entry] = value
+    return value
+
+
+def plan_key(df: DataFrame) -> int:
+    """``app_memo`` key for a frame's plan: the UNANALYZED logical
+    plan's ``semanticHash``, so a memo hit analyzes nothing (~40 ms
+    against ~135 ms for the analyzed plan, per fresh build). Identical
+    rebuilds hash alike; a different source, filter or expression
+    hashes apart (the scan leaf carries the concrete file relation)."""
+    return df._jdf.queryExecution().logical().semanticHash()
+
+
+def input_file_set(df: DataFrame):
+    """``app_memo`` key for a frame's input files, sorted; ``None``
+    for an in-memory frame, whose answers are not file-derived."""
+    return tuple(sorted(df.inputFiles())) or None
+
 
 #: logical-plan node classes whose presence makes a frame not
 #: scan-narrow: anything that shuffles or changes the partition
@@ -53,37 +106,29 @@ def fan_out(df: DataFrame) -> DataFrame:
     many cores exist; shingling/minhashing would then run serially.
     On a real multi-split 100 TB input this repartition collapses to
     a no-op (partitions already >= parallelism); locally it is one
-    tiny shuffle of the raw rows that unlocks every core."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    key = None
-    try:
-        # the memo applies ONLY to scan-narrow plans (advisor r13:
-        # the file-set key alone also matched post-shuffle frames
-        # over the same files, where a memoized under-parallel count
-        # would coalesce a WIDE frame down to defaultParallelism —
-        # a full extra shuffle, not a redundant tiny one). Any
-        # shuffle-inducing node disqualifies both memo store and
-        # memo hit, falling through to the live probe.
-        scan_narrow = not any(
-            w in c for c in _plan_node_names(df) for w in _WIDE_NODES
-        )
-        files = df.inputFiles() if scan_narrow else ()
-        if files:
-            key = (sc.applicationId, tuple(sorted(files)))
-    except Exception:  # noqa: BLE001 - probe fallback below
-        key = None
-    n = _FANOUT_MEMO.get(key) if key else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        # memoize only the under-parallel direction: a stale entry can
-        # then only ADD a redundant tiny repartition for a scan that
-        # (post-rewrite of the same files) became wide, never silently
-        # skip the fan-out a narrow frame needs
-        if key and n < target:
-            for stale in [k for k in _FANOUT_MEMO if k[0] != key[0]]:
-                _FANOUT_MEMO.pop(stale)
-            _FANOUT_MEMO[key] = n
+    tiny shuffle of the raw rows that unlocks every core.
+
+    The partition count comes from ``df.rdd.getNumPartitions()``,
+    which plans a fresh frame (~50-125 ms driver-side). ``app_memo``
+    keeps it per input-file set, for scan-narrow plans only and only
+    when under-parallel."""
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+
+    def narrow_files():
+        # a wide plan over the same files must neither store nor hit:
+        # a scan's under-parallel count would coalesce it to
+        # defaultParallelism, a full extra shuffle
+        if any(w in c for c in _plan_node_names(df) for w in _WIDE_NODES):
+            return None
+        return input_file_set(df)
+
+    n = app_memo(
+        spark, "fan_out", narrow_files, lambda: df.rdd.getNumPartitions(),
+        # keep only the under-parallel direction: a stale entry can then
+        # only ADD a redundant tiny repartition, never skip a needed one
+        store=lambda n: n < target,
+    )
     if n < target:
         return df.repartition(target)
     return df

@@ -121,55 +121,6 @@ def test_ngram_jaccard_size_filter(spark):
     assert got == _brute_jaccard_pairs(docs)
 
 
-def test_hoeffding_lane_parity(spark):
-    """The round-14 sweep lane (single-task Fenwick dominance sweep)
-    must return bit-identical results to the original cells² join
-    lane — forced by dropping the cut-over to 0."""
-    import random
-
-    import reddit_etl_spark.operators.relational as rel
-
-    random.seed(3)
-    rows = [(random.randint(0, 40), random.randint(0, 15)) for _ in range(5000)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    join_out = rel.hoeffding_d(df, "x", "y").collect()
-    saved = rel._HOEFFDING_SWEEP_MIN_CELLS
-    rel._HOEFFDING_LANE_MEMO.clear()
-    try:
-        rel._HOEFFDING_SWEEP_MIN_CELLS = 0
-        sweep_out = rel.hoeffding_d(df, "x", "y").collect()
-    finally:
-        rel._HOEFFDING_SWEEP_MIN_CELLS = saved
-        rel._HOEFFDING_LANE_MEMO.clear()
-    assert join_out == sweep_out
-    assert join_out[0]["n"] == 5000
-
-
-def test_hoeffding_memo_keys_on_the_plan(spark, tmp_path):
-    """A filtered call must not hand its cell count to a later call on
-    the unfiltered frame of the same files: the stale 360-cell count
-    picked the join lane for a 12k-cell grid, whose 10k-cell guard
-    then refused a call within max_cells."""
-    import reddit_etl_spark.operators.relational as rel
-
-    path = str(tmp_path / "grid")
-    spark.range(0, 12_000).selectExpr(
-        "id % 100 AS x", "id DIV 100 AS y"
-    ).write.parquet(path)
-    df = spark.read.parquet(path)
-    rel._HOEFFDING_LANE_MEMO.clear()
-    try:
-        small = rel.hoeffding_d(df.filter("x < 3"), "x", "y").collect()
-        full = rel.hoeffding_d(df, "x", "y").collect()
-        assert len(rel._HOEFFDING_LANE_MEMO) == 2
-        # an identical rebuild hits the memo instead of adding a key
-        assert rel.hoeffding_d(df, "x", "y").collect() == full
-        assert len(rel._HOEFFDING_LANE_MEMO) == 2
-    finally:
-        rel._HOEFFDING_LANE_MEMO.clear()
-    assert (small[0]["n_cells"], full[0]["n_cells"]) == (360, 12_000)
-
-
 def test_hoeffding_sweep_kernel_brute_force():
     """All seven dominance/marginal stats from the Fenwick sweep match
     a brute-force O(C²) reference on a random weighted grid."""
@@ -219,37 +170,6 @@ def test_hoeffding_sweep_kernel_empty():
     assert list(_hoeffding_dominance_sweep(iter([]))) == []
 
 
-def test_resolve_lane_memo_and_choice(spark):
-    """resolve_lane: explicit lanes pass through, 'auto' probes once
-    and memoizes per (app, plan-hash), and the cut-over constant is
-    honored."""
-    import reddit_etl_spark.operators.scale_lanes as sl
-
-    df = spark.range(0, 100).selectExpr("id AS __v")
-    sl._AUTO_LANE_MEMO.clear()
-    assert sl.resolve_lane("single", df) == "single"
-    assert sl.resolve_lane("two_pass", df) == "two_pass"
-    assert sl.resolve_lane("auto", df) == "single"  # 100 < 1e6
-    assert len(sl._AUTO_LANE_MEMO) == 1
-    # identical rebuild hits the memo (same key, no new entry)
-    df2 = spark.range(0, 100).selectExpr("id AS __v")
-    assert sl.resolve_lane("auto", df2) == "single"
-    assert len(sl._AUTO_LANE_MEMO) == 1
-    # a different frame probes separately
-    df3 = spark.range(0, 50).selectExpr("id AS __v")
-    assert sl.resolve_lane("auto", df3) == "single"
-    assert len(sl._AUTO_LANE_MEMO) == 2
-    # cut-over honored (patched constant, no giant frame needed)
-    saved = sl.TWO_PASS_MIN_ROWS
-    try:
-        sl.TWO_PASS_MIN_ROWS = 10
-        sl._AUTO_LANE_MEMO.clear()
-        assert sl.resolve_lane("auto", df) == "two_pass"  # 100 > 10
-    finally:
-        sl.TWO_PASS_MIN_ROWS = saved
-        sl._AUTO_LANE_MEMO.clear()
-
-
 def test_auto_default_matches_explicit_single(spark):
     """The promoted lane='auto' default must produce bit-identical
     results to the old 'single' default at sub-cut-over sizes (it
@@ -267,85 +187,6 @@ def test_auto_default_matches_explicit_single(spark):
     auto = wasserstein_distance(df, "v", "c", "a").collect()
     single = wasserstein_distance(df, "v", "c", "a", lane="single").collect()
     assert auto == single
-
-
-def test_fan_out_memo_scan_narrow_only(spark, tmp_path):
-    """advisor r13: a memoized under-parallel scan count must never
-    apply to a post-shuffle WIDE frame over the same files (that
-    memo hit coalesced the frame to defaultParallelism — a full
-    extra shuffle). The memo now gates on a scan-narrow plan."""
-    import reddit_etl_spark.operators.util as u
-
-    p = str(tmp_path / "one.parquet")
-    spark.range(0, 100).coalesce(1).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    u._FANOUT_MEMO.clear()
-    out = u.fan_out(df)
-    assert len(u._FANOUT_MEMO) == 1  # narrow scan memoized
-    assert out.rdd.getNumPartitions() >= df.rdd.getNumPartitions()
-    wide = df.repartition(64)
-    assert u.fan_out(wide).rdd.getNumPartitions() == 64  # untouched
-    agg = df.groupBy(F.col("id") % 3).count()
-    u.fan_out(agg)
-    assert len(u._FANOUT_MEMO) == 1  # post-agg frame never keyed
-    u._FANOUT_MEMO.clear()
-
-
-def test_fan_out_memo_ignores_column_names(spark, tmp_path):
-    """ADVICE r14: the memo gate matched substrings of the plan TEXT,
-    so a scan with a column named ``JoinKey`` never reached the memo.
-    It now reads plan-node class names."""
-    import reddit_etl_spark.operators.util as u
-
-    p = str(tmp_path / "jk.parquet")
-    spark.range(0, 100).withColumnRenamed("id", "JoinKey").coalesce(1).write.parquet(p)
-    u._FANOUT_MEMO.clear()
-    try:
-        u.fan_out(spark.read.parquet(p))
-        assert len(u._FANOUT_MEMO) == 1  # narrow scan memoized
-        # poison the entry: a memo hit now skips the fan-out that the
-        # live probe (one partition) would add
-        u._FANOUT_MEMO[next(iter(u._FANOUT_MEMO))] = 10**6
-        again = spark.read.parquet(p).select("JoinKey")
-        assert u.fan_out(again) is again
-    finally:
-        u._FANOUT_MEMO.clear()
-
-
-def test_fan_out_memo_skips_set_ops_and_pandas_groups(spark, tmp_path):
-    """An intersect (or except, pandas group map, rebalance) over the
-    same files is not scan-narrow: it neither stores nor hits."""
-    import reddit_etl_spark.operators.util as u
-
-    p = str(tmp_path / "one.parquet")
-    spark.range(0, 100).coalesce(1).write.parquet(p)
-    df = spark.read.parquet(p)
-    wide = [
-        df.intersect(df),
-        df.exceptAll(df),
-        df.groupBy("id").applyInPandas(lambda g: g, "id long"),
-        df.hint("rebalance"),
-    ]
-    class Spy(dict):
-        def get(self, key, default=None):
-            reads.append(key)
-            return super().get(key, default)
-
-    reads: list = []
-    saved = u._FANOUT_MEMO
-    u._FANOUT_MEMO = Spy()
-    try:
-        for w in wide:
-            u.fan_out(w)
-        assert u._FANOUT_MEMO == {}  # no store
-        assert reads == []  # no read
-        u.fan_out(df)
-        assert len(u._FANOUT_MEMO) == 1
-        for w in wide:
-            u.fan_out(w)
-        assert len(reads) == 1  # only the narrow scan read it
-    finally:
-        u._FANOUT_MEMO = saved
 
 
 def test_deming_floor_micros_on_exact_boundary(spark):
