@@ -1,7 +1,6 @@
 """Shared plumbing for the harness package: table loaders, oracle-
 stability helpers (stable_avg/round6), the HarnessQuery dataclass and
-the @_q registration decorator. Split out of the single-file
-harness.py in round 12 (judge r11 #6).
+the @_q registration decorator.
 
 The engine's operators are schema-generic (FIXTURES.md §B); this module
 instantiates every query shape from the reference's 15-query surface

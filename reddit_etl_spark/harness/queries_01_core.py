@@ -1,8 +1,4 @@
 """Harness queries (part 1/6): the reference's 15-query contract (q01-q15) + first-wave dedup/similarity/text entries.
-
-Mechanically split from the round-11 single-file harness.py (judge
-r11 #6) PRESERVING definition order — registration order, and thus
-the driver-recorded head, is unchanged (tests/test_registry.py).
 """
 
 from __future__ import annotations

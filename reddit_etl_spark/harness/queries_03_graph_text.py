@@ -1,8 +1,4 @@
 """Harness queries (part 3/6): graph/ranking/linkage/text-statistics waves + search-eval entries.
-
-Mechanically split from the round-11 single-file harness.py (judge
-r11 #6) PRESERVING definition order — registration order, and thus
-the driver-recorded head, is unchanged (tests/test_registry.py).
 """
 
 from __future__ import annotations

@@ -1,8 +1,4 @@
 """Harness queries (part 6/6): round-10/11 statistics tail: rank lanes, effect sizes, agreement, robust location.
-
-Mechanically split from the round-11 single-file harness.py (judge
-r11 #6) PRESERVING definition order — registration order, and thus
-the driver-recorded head, is unchanged (tests/test_registry.py).
 """
 
 from __future__ import annotations

@@ -1,10 +1,5 @@
 """Harness queries (part 8): round-13 registrations.
 
-Two capped waves (judge r12 #3: head slack goes to stale
-re-attestations, so net-new registrations stay ≤ the slack after the
-backlog + deming re-attestation are seated; each registration
-displaces one stale-attestation filler from the head).
-
 Wave 1: Lilliefors normality (max-gap companion to ad_normal), Kuiper
 cyclic two-sample, Hoeffding's D general dependence, Blomqvist's
 medial correlation, the paired sign test, Breslow-Day OR homogeneity

@@ -235,10 +235,29 @@ def test_pipeline_batch_runs_at_most_three_jobs(spark, tmp_path):
     for jid in sc.statusTracker().getJobIdsForGroup(group):
         job = store.job(jid)
         assert job.description().get() == "pipeline batch"
-        sids = job.stageIds()
-        for i in range(sids.size()):
-            stage = store.stageData(sids.apply(i), False, None, False, None)
-            assert stage.apply(0).schedulingPool() == "batch-pool"
+        for stage in _stored_stages(store, job):
+            assert stage.schedulingPool() == "batch-pool"
+
+
+def _stored_stages(store, job) -> list:
+    """The last attempt of each of ``job``'s stages that the status
+    store still holds. Past ``spark.ui.retainedStages`` the store
+    evicts stages oldest completion time first, and a skipped stage
+    has none (-1), so skipped stages go first and an id may be gone
+    for that reason alone. A stage that ran must still be there: the
+    number missing is at most the job's skipped stages."""
+    ids = job.stageIds()
+    held = []
+    for i in range(ids.size()):
+        attempts = store.stageData(ids.apply(i), False, None, False, None)
+        if attempts.nonEmpty():
+            held.append(max(
+                (attempts.apply(a) for a in range(attempts.size())),
+                key=lambda st: st.attemptId(),
+            ))
+    missing = ids.size() - len(held)
+    assert missing <= job.numSkippedStages(), (job.jobId(), missing)
+    return held
 
 
 def _batch_paths(tmp_path) -> dict[str, str]:
@@ -838,9 +857,7 @@ def _stream_work_per_batch(spark, query) -> dict[int, list[int]]:
         batch = int(re.search(r"batch = (\d+)", job.description().get()).group(1))
         work = out.setdefault(batch, [0, 0, 0])
         work[0] += 1
-        stages = job.stageIds()
-        for i in range(stages.size()):
-            stage = store.lastStageAttempt(stages.apply(i))
+        for stage in _stored_stages(store, job):
             work[1] += stage.shuffleWriteRecords()
             work[2] += stage.shuffleReadRecords()
     return out

@@ -1,12 +1,8 @@
-"""Guards on the harness registry's driver-recorded-head curation
-(advisor r3, harness.py:144): the emitted order must be a permutation
-of the registry, curated lists must name real registrations, and an
-uncurated registration must raise instead of silently landing in the
-unrecorded tail. Pure-Python — no SparkSession needed."""
+"""The harness registry's order: the driver-recorded ``_HEAD`` first,
+then every other registration in registration order. Pure-Python — no
+SparkSession needed."""
 
 from __future__ import annotations
-
-import pytest
 
 from reddit_etl_spark import harness
 
@@ -17,98 +13,11 @@ def test_registry_is_permutation():
     assert len(order) == len(harness._REGISTRY)
 
 
-def test_recorded_head_exactly_cap_and_contains_rotation():
+def test_head_then_registration_order():
     order = list(harness.registry())
-    head = order[: harness._DRIVER_RECORD_CAP]
-    assert len(head) == harness._DRIVER_RECORD_CAP
-    # ROUND-13 rotation contract (judge r12 #1-#3 + the standing rule
-    # "driver head = current backlog, then oldest attestations").
-    # The 8 round-13 registrations ride as base (attested the round
-    # they are born); deming_part_price — the lone red r12 driver
-    # row — leads the PROMOTED block for re-attestation on the
-    # hardened round6_floor output; the 8 round-12-wave-6/7-born
-    # queries that had never held a driver CORRECTNESS row through
-    # r12 ride with it; the remaining slots carry the stalest (r05)
-    # attestations, displaced one-for-one from the END by the r13
-    # registrations.
-    new_r13 = [
-        # wave 1
-        "lilliefors_values", "kuiper_click_error_hours",
-        "hoeffding_d_lineitem", "blomqvist_beta_lineitem",
-        "sign_test_user_halves", "breslow_day_priority",
-        "tvd_value_drift", "feature_screen_orders",
-        # wave 2
-        "wilson_ci_events", "dagostino_k2_values",
-        "granger_lag1_daily", "chow_break_daily",
-        "ww_runs_click_error", "bws_click_error",
-        "embedding_centroid_labels",
-        # wave 3
-        "g_test_status_priority", "icc_user_halves",
-        "cusum_squares_daily", "spiegelhalter_z_events",
-        "cronbach_doc_rules", "group_kfold_users",
-        # wave 4 (the norm_ppf normal-scores family)
-        "vdw_event_values", "fligner_killeen_types",
-        "shapiro_francia_values", "bartels_rank_daily",
-        "newey_west_daily",
-    ]
-    assert head[: len(new_r13)] == new_r13
-    assert head[len(new_r13)] == "deming_part_price"
-    backlog_r12 = {
-        "lepage_click_error", "van_elteren_click_weekday",
-        "cv_qcd_event_types", "robust_shape_values",
-        "longest_run_daily", "record_highs_daily",
-        "bh_fdr_daily", "ad_normal_values",
-    }
-    assert len(backlog_r12) == 8
-    assert backlog_r12 <= set(head)
-    # the stalest r05 attestations lead the filler block (spot sample)
-    for q in ("mixture_weights", "pagerank_cust_supp", "psi_value_drift"):
-        assert q in head, q
-    # the whole r12 head minus deming (19-query r11 backlog block +
-    # the 30 other wave-1..5 registrations, all driver-attested green
-    # in CORRECTNESS_r12) rotated out — still registered +
-    # oracle-checked (spot sample)
-    for q in (
-        "ks_expfit_values", "covariate_balance_arms",
-        "cramers_v_status_priority", "hosmer_lemeshow_events",
-        "ols2_lineitem_price", "ipw_ate_urgent_value",
-        "ewma_chart_daily", "taylors_law_events",
-        "footrule_day_rankings", "burrows_delta_sources",
-    ):
-        assert q not in head, q
-        assert q in order, q
-    # the full 22-query TPC-H shape suite stays registered (all 22
-    # driver-recorded across r06-r08)
+    head = list(harness._HEAD)
+    assert len(head) == len(set(head)) == 50
+    assert order[:50] == head
+    assert order[50:] == [n for n in harness._REGISTRY if n not in set(head)]
+    # the full 22-query TPC-H shape suite stays registered
     assert len([n for n in order if n.startswith("tpch_")]) == 22
-
-
-def test_tail_is_fully_curated():
-    """Every entry past the recorded head appears in _DEFERRED — no
-    implicit tail (the advisor's silent-coverage-loss finding)."""
-    order = list(harness.registry())
-    tail = order[harness._DRIVER_RECORD_CAP :]
-    assert set(tail) <= set(harness._DEFERRED)
-
-
-def test_unknown_curated_name_raises(monkeypatch):
-    monkeypatch.setattr(harness, "_PROMOTED", harness._PROMOTED + ["no_such_query"])
-    with pytest.raises(ValueError, match="no_such_query"):
-        harness.registry()
-
-
-def test_promoted_deferred_overlap_raises(monkeypatch):
-    monkeypatch.setattr(
-        harness, "_DEFERRED", harness._DEFERRED + [harness._PROMOTED[0]]
-    )
-    with pytest.raises(ValueError, match="both"):
-        harness.registry()
-
-
-def test_uncurated_registration_raises(monkeypatch):
-    """A new @_q registration not placed in _PROMOTED/_DEFERRED must
-    fail loudly, naming the overflow entry."""
-    fake = dict(harness._REGISTRY)
-    fake["brand_new_query"] = next(iter(harness._REGISTRY.values()))
-    monkeypatch.setattr(harness, "_REGISTRY", fake)
-    with pytest.raises(ValueError, match="brand_new_query"):
-        harness.registry()

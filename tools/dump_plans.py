@@ -52,7 +52,8 @@ def main() -> int:
         "| query | shuffles | broadcast join | TakeOrdered | pushed filters | scan columns |",
         "|---|---|---|---|---|---|",
     ]
-    for name, hq in registry().items():
+    # sorted by name, so the rows do not move with registry order
+    for name, hq in sorted(registry().items()):
         if not hq.headline:
             continue
         df = hq.builder(spark, sf_dir)
