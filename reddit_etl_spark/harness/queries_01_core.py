@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import threading
+
 from ._common import (  # noqa: F401
     DataFrame,
     F,
@@ -606,35 +608,39 @@ def similarity_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: x k = 50 rows, so persist() costs nothing; correctness is untouched
 #: because every consumer already received exactly this plan.
 _EXACT_TOPK_CACHE: dict[tuple[str, str], DataFrame] = {}
+#: one builder per miss: two threads that missed at once would each
+#: persist a frame, and the one overwritten would stay persisted
+_EXACT_TOPK_LOCK = threading.Lock()
 
 
 def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk
 
     key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EXACT_TOPK_CACHE.get(key)
-    if df is None:
-        # evict entries from OTHER applications (advisor r4 #4): a
-        # module-level cache outlives SparkSessions, so stopped apps'
-        # entries would otherwise accumulate for the process lifetime.
-        # unpersist on a stopped session can throw — the blocks died
-        # with the app, so the drop is still correct.
-        for stale in [k for k in _EXACT_TOPK_CACHE if k[0] != key[0]]:
-            old = _EXACT_TOPK_CACHE.pop(stale)
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 - session already stopped
-                pass
-        emb = load(spark, sf_dir, "embeddings")
-        df = cosine_topk(
-            emb,
-            emb.filter(F.col("vec_id") < 10),
-            "vec_id",
-            "embedding",
-            "vec_id",
-            k=5,
-        ).persist()
-        _EXACT_TOPK_CACHE[key] = df
+    with _EXACT_TOPK_LOCK:
+        df = _EXACT_TOPK_CACHE.get(key)
+        if df is None:
+            # evict entries from OTHER applications: a module-level
+            # cache outlives SparkSessions, so stopped apps' entries
+            # would otherwise accumulate for the process lifetime.
+            # unpersist on a stopped session can throw — the blocks died
+            # with the app, so the drop is still correct.
+            for stale in [k for k in _EXACT_TOPK_CACHE if k[0] != key[0]]:
+                old = _EXACT_TOPK_CACHE.pop(stale)
+                try:
+                    old.unpersist()
+                except Exception:  # noqa: BLE001 - session already stopped
+                    pass
+            emb = load(spark, sf_dir, "embeddings")
+            df = cosine_topk(
+                emb,
+                emb.filter(F.col("vec_id") < 10),
+                "vec_id",
+                "embedding",
+                "vec_id",
+                k=5,
+            ).persist()
+            _EXACT_TOPK_CACHE[key] = df
     return df
 
 

@@ -28,6 +28,20 @@ driver harness — gets the same tuned session:
   floor"); the package's directory goes on the workers' ``PYTHONPATH``
   so they can import it. A cluster keeps PySpark's own daemon: there
   the package reaches the executors only as the job ships it.
+- PySpark's call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). While it is
+  on, every ``pyspark.sql.functions`` call and every ``Column`` method
+  fetches the active session and a conf, and sets and clears a JVM
+  call-site origin: one ``transform_posts`` build took 526 py4j round
+  trips with it and 188 without (SCALING.md, "Call-site capture
+  off"). The cost: an error from a DataFrame-API expression no longer
+  names its Python call site in the ``== DataFrame ==`` context; error
+  classes and SQL-text contexts are unchanged. PySpark reads the switch
+  once per Python process, at the first wrapped call made while a
+  session is active. To keep the call sites, pass
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  to the process's first session; a session not built by
+  ``get_spark`` keeps whatever value was read first.
 """
 
 from __future__ import annotations
@@ -72,6 +86,7 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Files: pack small test files, but keep the default 128m split so
         # a 100 TB scan parallelizes across the whole cluster.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

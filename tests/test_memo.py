@@ -1,15 +1,18 @@
 """``operators.util.app_memo``, the one per-application memo, and the
 sites that keep their answers in it: table schemas and row counts
 (harness), ``fan_out``, the ngram prefix choice, ``resolve_lane`` and
-``hoeffding_d``'s lane probe.
+``hoeffding_d``'s lane probe; and ``_EXACT_TOPK_CACHE``, which holds a
+persisted frame outside it.
 """
 
 from __future__ import annotations
 
 import sys
+import time
 from collections import Counter
 
 import pytest
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 import reddit_etl_spark.operators.util as u
@@ -335,3 +338,43 @@ def test_warm_curation_round_hits_every_lookup(spark, monkeypatch):
     lookups = Counter(c["tag"] for c in warm if c["keyed"])
     assert lookups == Counter(schema=6, fan_out=2, prefix=1)
     assert not any(c["computed"] for c in warm)
+
+
+def test_exact_topk_builds_once_for_concurrent_misses(spark, monkeypatch):
+    """Two threads that miss ``_EXACT_TOPK_CACHE`` at once get one
+    persisted frame: without the lock each built and persisted its own,
+    and the entry overwritten stayed persisted with no owner."""
+    import reddit_etl_spark.operators.similarity as sim
+    from reddit_etl_spark.harness import queries_01_core as core
+
+    real = sim.cosine_topk
+    built = []
+
+    def slow(*args, **kwargs):
+        built.append(1)
+        time.sleep(0.5)  # both threads are past the lookup by now
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sim, "cosine_topk", slow)
+    while core._EXACT_TOPK_CACHE:
+        core._EXACT_TOPK_CACHE.popitem()[1].unpersist()
+    got = [None, None]
+
+    def call(i):
+        got[i] = core._exact_topk(spark, SF_DIR)
+
+    threads = [InheritableThread(target=call, args=(i,)) for i in (0, 1)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert len(built) == 1
+        assert got[0] is not None and got[0] is got[1]
+        assert len(core._EXACT_TOPK_CACHE) == 1
+    finally:
+        while core._EXACT_TOPK_CACHE:
+            core._EXACT_TOPK_CACHE.popitem()[1].unpersist()
+        for df in got:
+            if df is not None:
+                df.unpersist()

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import gc
 import os
 import random
 import re
@@ -11,6 +12,7 @@ import threading
 import time
 
 import pytest
+import pyspark.errors.utils as pyspark_errors_utils
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
@@ -384,6 +386,38 @@ def test_get_spark_sizes_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_get_spark_turns_off_call_site_capture(spark, monkeypatch):
+    """With PySpark's call-site capture on, every ``functions`` call and
+    ``Column`` method adds session, conf and origin round trips: one
+    transform build took 526 py4j commands with it, 188 without."""
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled", "true")
+        == "false"
+    )
+    # a Column call made with no active session caches False; read the
+    # switch again from this session
+    monkeypatch.setattr(pyspark_errors_utils, "_enable_debugging_cache", None)
+    batch = posts_df(spark, [])
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def counted(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    gc.disable()
+    try:
+        transform_posts(batch)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+    # py4j's deferred deletes of Java objects freed earlier
+    built = [c for c in sent if not c.startswith("m\nd\n")]
+    assert len(built) <= 200, len(built)
 
 
 def test_warm_round_compiles_no_class(spark, tmp_path):

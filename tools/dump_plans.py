@@ -40,14 +40,13 @@ def main() -> int:
         "pre-checkpoint shape is documented in `operators/dedup.py` "
         "docstrings and pinned by `tests/test_plans.py`.",
         "",
-        "SCOPE (judge r10 next-round #4): this table covers the "
-        "HEADLINE bench set only. Plan-shape truth for the full "
-        "registry — reduced-frame windows, broadcast-only joins, "
-        "TakeOrdered argmaxes, single-aggregate moment plans, the "
-        "guarded distinct-value lane — is asserted executably in "
-        "`tests/test_plans.py` (one test per plan discipline, run "
-        "every round); this file is the generated, diff-reviewable "
-        "snapshot, regenerated each round by re-running the tool.",
+        "Scope: this table covers the headline bench set only. "
+        "Plan shapes across the full registry — reduced-frame windows, "
+        "broadcast-only joins, TakeOrdered argmaxes, single-aggregate "
+        "moment plans, the guarded distinct-value lane — are asserted "
+        "in `tests/test_plans.py`, one test per plan discipline; this "
+        "file is a generated snapshot for reading diffs, refreshed by "
+        "re-running the tool.",
         "",
         "| query | shuffles | broadcast join | TakeOrdered | pushed filters | scan columns |",
         "|---|---|---|---|---|---|",
