@@ -3,8 +3,17 @@
 
 Every query is the SQL twin of the DataFrame builder in
 ``queries.py`` (equivalence proven in tests/test_analysis_sql.py).
-Resolved against the views registered by ``queries.register_views``
-(posts, comments, post_performance).
+Each text is a ``str.format`` template: ``{posts}`` and ``{comments}``
+stand for the tables and ``{as_of}`` for q13's anchor date. They are
+bound by PySpark's DataFrame-argument form of ``spark.sql``, as
+``Engine.analysis`` does::
+
+    spark.sql(ANALYSIS_QUERIES["q08"], posts=posts, comments=comments)
+
+which registers each frame under a unique view name for that one call
+and drops it afterwards, so no session view names a table. Pass
+``as_of`` as a ``datetime.date``: the formatter quotes a ``str`` as a
+SQL string literal.
 
 Dialect notes vs the SQLite original (/root/reference/analysis.sql):
 - STDDEV -> stddev_samp, CORR -> corr (both built-in here; absent in
@@ -27,7 +36,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                AVG(num_comments) AS avg_comments,
                MAX(score)        AS highest_score,
                MIN(score)        AS lowest_score
-        FROM posts
+        FROM {posts} posts
         GROUP BY subreddit
         ORDER BY total_posts DESC
     """,
@@ -35,8 +44,8 @@ ANALYSIS_QUERIES: dict[str, str] = {
     "q02": """
         SELECT subreddit, title, author, score, num_comments,
                upvote_ratio, created_utc
-        FROM posts
-        WHERE score IN (SELECT MAX(score) FROM posts p2
+        FROM {posts} posts
+        WHERE score IN (SELECT MAX(score) FROM {posts} p2
                         WHERE p2.subreddit = posts.subreddit)
         ORDER BY score DESC
     """,
@@ -46,7 +55,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                COUNT(*)          AS post_count,
                AVG(score)        AS avg_score,
                AVG(num_comments) AS avg_comments
-        FROM posts
+        FROM {posts} posts
         GROUP BY hour_posted
         ORDER BY hour_posted
     """,
@@ -60,7 +69,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                     WHEN 6 THEN 'Sunday' END AS day_name,
                COUNT(*)   AS post_count,
                AVG(score) AS avg_score
-        FROM posts
+        FROM {posts} posts
         GROUP BY day_of_week
         ORDER BY day_of_week
     """,
@@ -70,7 +79,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                COUNT(*)          AS post_count,
                AVG(score)        AS avg_score,
                SUM(num_comments) AS total_comments_received
-        FROM posts
+        FROM {posts} posts
         WHERE author <> '[deleted]'
         GROUP BY author
         HAVING COUNT(*) > 1
@@ -85,7 +94,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                SUM(CASE WHEN is_original_content THEN 1 ELSE 0 END) AS oc_posts,
                SUM(CASE WHEN over_18 THEN 1 ELSE 0 END)             AS nsfw_posts,
                COUNT(*)                                             AS total_posts
-        FROM posts
+        FROM {posts} posts
         GROUP BY subreddit
     """,
     # analysis.sql:86-95
@@ -94,7 +103,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                COUNT(*)             AS post_count,
                AVG(engagement_rate) AS avg_engagement_rate,
                AVG(upvote_ratio)    AS avg_upvote_ratio
-        FROM posts
+        FROM {posts} posts
         GROUP BY subreddit, score_category
         ORDER BY subreddit, score_category
     """,
@@ -104,7 +113,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                COUNT(c.id)              AS total_comments,
                AVG(c.score)             AS avg_comment_score,
                COUNT(DISTINCT c.author) AS unique_commenters
-        FROM posts p LEFT JOIN comments c ON p.id = c.post_id
+        FROM {posts} p LEFT JOIN {comments} c ON p.id = c.post_id
         GROUP BY p.subreddit
     """,
     # analysis.sql:107-118 — the golden example.csv query
@@ -112,7 +121,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
         SELECT p.subreddit, c.author,
                COUNT(c.id) AS comment_count,
                AVG(c.score) AS avg_comment_score
-        FROM posts p JOIN comments c ON p.id = c.post_id
+        FROM {posts} p JOIN {comments} c ON p.id = c.post_id
         WHERE c.author <> '[deleted]'
         GROUP BY p.subreddit, c.author
         HAVING COUNT(c.id) >= 3
@@ -124,7 +133,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                COUNT(*)   AS daily_posts,
                AVG(score) AS avg_daily_score,
                MAX(score) AS max_daily_score
-        FROM posts
+        FROM {posts} posts
         GROUP BY 1, 2
         ORDER BY date DESC, subreddit
     """,
@@ -134,7 +143,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                AVG(title_length) AS avg_title_length,
                AVG(CASE WHEN title LIKE '%?%' THEN 1 ELSE 0 END)    AS question_rate,
                AVG(CASE WHEN upper(title) = title THEN 1 ELSE 0 END) AS all_caps_rate
-        FROM posts
+        FROM {posts} posts
         GROUP BY subreddit
     """,
     # analysis.sql:140-148
@@ -143,11 +152,11 @@ ANALYSIS_QUERIES: dict[str, str] = {
                corr(title_length, score)    AS title_length_score_corr,
                corr(selftext_length, score) AS selftext_length_score_corr,
                corr(hour_posted, score)     AS hour_score_corr
-        FROM posts
+        FROM {posts} posts
         WHERE score > 0
         GROUP BY subreddit
     """,
-    # analysis.sql:150-161 — {as_of} substituted by sql()
+    # analysis.sql:150-161 — {as_of} bound by Engine.analysis()
     "q13": """
         SELECT subreddit,
                COUNT(*)               AS posts_this_week,
@@ -155,7 +164,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                stddev_samp(score)     AS score_std_dev,
                AVG(num_comments)      AS avg_comments,
                COUNT(DISTINCT author) AS unique_authors
-        FROM posts
+        FROM {posts} posts
         WHERE created_utc >= CAST(date_sub(DATE'{as_of}', 7) AS TIMESTAMP)
         GROUP BY subreddit
         ORDER BY avg_score DESC
@@ -167,7 +176,7 @@ ANALYSIS_QUERIES: dict[str, str] = {
                AVG(CASE WHEN NOT is_original_content THEN score END) AS avg_non_oc_score,
                SUM(CASE WHEN is_original_content THEN 1 ELSE 0 END) * 100.0D
                    / COUNT(*) AS oc_percentage
-        FROM posts
+        FROM {posts} posts
         GROUP BY subreddit
     """,
     # analysis.sql:172-183 — the view body
@@ -179,6 +188,6 @@ ANALYSIS_QUERIES: dict[str, str] = {
                     ELSE 'Low' END AS performance_tier,
                RANK() OVER (PARTITION BY subreddit ORDER BY score DESC)
                    AS rank_in_subreddit
-        FROM posts
+        FROM {posts} posts
     """,
 }

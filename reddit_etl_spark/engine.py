@@ -11,12 +11,11 @@ object::
     eng.sql("SELECT * FROM post_performance WHERE rank_in_subreddit = 1")
     eng.refresh_stats(stats_path, as_of)  # the keyed upsert
 
-Tables load lazily from the lakehouse paths and register as the views
-(posts, comments, post_performance) the SQL surface resolves against.
-They are read in the pipeline's declared schemas (``POSTS_SCHEMA``,
-``COMMENTS_SCHEMA``) instead of inferring one from the files, which
-costs a Spark job per table; a partition column (posts' ``subreddit``)
-comes last, as an inferred read would put it. The declared schema wins
+Tables load lazily from the lakehouse paths. They are read in the
+pipeline's declared schemas (``POSTS_SCHEMA``, ``COMMENTS_SCHEMA``)
+instead of inferring one from the files, which costs a Spark job per
+table; a partition column (posts' ``subreddit``) comes last, as an
+inferred read would put it. The declared schema wins
 over the files: a declared column missing from a file (a lake written
 before the column was added) reads as NULL rather than failing, and a
 column found only in the files is not read.
@@ -46,18 +45,23 @@ listed (the first use of ``posts`` or ``comments``); a lake that grows
 past the bound afterwards keeps one partition until a new ``Engine``
 is built.
 
-The views are the session's, not the ``Engine``'s: a second ``Engine``
-over the same session replaces them with its own tables. Each
-``Engine`` therefore registers its views again on its next ``sql`` or
-``analysis`` call once another ``Engine`` has registered in the
-session since, and only then.
+``analysis`` binds this ``Engine``'s own frames into the query text
+for that one call (PySpark's DataFrame-argument ``spark.sql``, see
+``analysis_sql``) and leaves no session view behind, so Engines over
+one session, on one thread or several, each read their own lake.
+``sql`` runs the user's text, which names the session views ``posts``,
+``comments`` and ``post_performance``: it registers them over this
+``Engine``'s tables and analyzes the statement under one process-wide
+lock. Classic ``spark.sql`` analyzes eagerly, so the frame it returns
+keeps this ``Engine``'s tables even after another ``Engine`` registers
+its own; the views themselves stay in the session until replaced.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import functools
-import weakref
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -67,8 +71,9 @@ from .schemas import COMMENTS_SCHEMA, POSTS_SCHEMA
 from .sources.reddit import comments_df
 from .stats import daily_subreddit_stats, write_subreddit_stats
 
-#: per session, the key of the ``Engine`` whose tables its views hold
-_VIEWS_OWNER: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: held from registering the session views until ``sql`` has analyzed
+#: its statement against them
+_SQL_LOCK = threading.Lock()
 
 
 class Engine:
@@ -81,8 +86,6 @@ class Engine:
         self.spark = spark
         self._posts_path = posts_path
         self._comments_path = comments_path
-        # a key of its own: an id() could be reused by a later Engine
-        self._views_key = object()
 
     @functools.cached_property
     def posts(self) -> DataFrame:
@@ -109,38 +112,36 @@ class Engine:
         small = size <= min(conf.autoBroadcastJoinThreshold(), min_partition)
         return df.coalesce(1) if small else df
 
-    def _ensure_views(self) -> None:
-        if _VIEWS_OWNER.get(self.spark) is not self._views_key:
-            comments = (
-                self.comments
-                if self._comments_path is not None
-                else comments_df(self.spark, [])
-            )
-            q.register_views(self.posts, comments)
-            _VIEWS_OWNER[self.spark] = self._views_key
+    def _comments_or_empty(self) -> DataFrame:
+        if self._comments_path is None:
+            return comments_df(self.spark, [])
+        return self.comments
 
     # --- the ad-hoc SQL path (SURVEY §3.3) ----------------------------
     def sql(self, statement: str) -> DataFrame:
-        self._ensure_views()
-        return self.spark.sql(statement)
+        posts, comments = self.posts, self._comments_or_empty()
+        with _SQL_LOCK:
+            q.register_views(posts, comments)
+            return self.spark.sql(statement)
 
     def analysis(self, name: str, as_of=None) -> DataFrame:
         """Run one of the ported analysis.sql queries (q01..q15).
         ``as_of`` is validated as a calendar date before it is spliced
         into the DATE literal — arbitrary strings never reach the SQL
         text."""
-        self._ensure_views()
         stmt = ANALYSIS_QUERIES[name]
+        binds = {"posts": self.posts}
+        if "{comments}" in stmt:
+            binds["comments"] = self._comments_or_empty()
         if "{as_of}" in stmt:
             if as_of is None:
                 raise ValueError(f"{name} needs an explicit as_of date")
-            as_of_date = (
+            binds["as_of"] = (
                 as_of
                 if isinstance(as_of, _dt.date)
                 else _dt.date.fromisoformat(str(as_of))
             )
-            stmt = stmt.format(as_of=as_of_date.isoformat())
-        return self.spark.sql(stmt)
+        return self.spark.sql(stmt, **binds)
 
     # --- the stats path (SURVEY §3.2) ---------------------------------
     def refresh_stats(

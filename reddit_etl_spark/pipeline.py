@@ -103,7 +103,8 @@ def run_pipeline(
     stats upsert. Errors are contained per subreddit (the reference's
     main() logs and moves on, script.py:351-353) and, within a batch,
     per load (module docstring)."""
-    if len({posts_path, comments_path, stats_path}) < 3:
+    paths = (posts_path, comments_path, stats_path)
+    if len({_qualified(spark, p) for p in paths}) < 3:
         raise ValueError(
             "posts, comments and stats need three different paths: a "
             "batch writes them concurrently"
@@ -123,6 +124,16 @@ def run_pipeline(
             log.exception("pipeline failed for r/%s", sub)
             res.errors.append(str(e))
     return results
+
+
+def _qualified(spark: SparkSession, path: str) -> str:
+    """``path`` as Hadoop resolves it: with its file system's scheme
+    and authority, against the working directory when relative, and
+    without ``.``, ``..`` or a trailing slash. Two spellings of one
+    directory compare equal; nothing is read."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(p).toString()
 
 
 def _run_one(

@@ -12,11 +12,6 @@ from reddit_etl_spark.analysis_sql import ANALYSIS_QUERIES
 from tests.conftest import AS_OF, canon_rows
 
 
-@pytest.fixture(scope="module", autouse=True)
-def views(posts, comments):
-    q.register_views(posts, comments)
-
-
 def _builder_df(name, posts, comments):
     builders = {
         "q01": lambda: q.q01_subreddit_overview(posts),
@@ -40,8 +35,10 @@ def _builder_df(name, posts, comments):
 
 @pytest.mark.parametrize("name", sorted(ANALYSIS_QUERIES))
 def test_sql_matches_builder(spark, posts, comments, name):
-    sql = ANALYSIS_QUERIES[name].format(as_of=AS_OF)
-    sql_rows = canon_rows([tuple(r) for r in spark.sql(sql).collect()])
+    sql_df = spark.sql(
+        ANALYSIS_QUERIES[name], posts=posts, comments=comments, as_of=AS_OF
+    )
+    sql_rows = canon_rows([tuple(r) for r in sql_df.collect()])
     df = _builder_df(name, posts, comments)
     df_rows = canon_rows([tuple(r) for r in df.collect()])
     assert sql_rows == df_rows

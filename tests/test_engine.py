@@ -6,8 +6,11 @@ the written layout."""
 from __future__ import annotations
 
 import datetime as dt
+import sys
+import threading
 
 import pytest
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 from reddit_etl_spark.analysis_sql import ANALYSIS_QUERIES
@@ -82,10 +85,29 @@ def test_engine_data_quality_clean_fixture(engine):
 
 
 def test_engine_views_launch_no_job(spark, lake):
-    """The tables are read in their declared schemas: registering the
-    views infers nothing, so it runs no Spark job."""
+    """The tables are read in their declared schemas: building an
+    analysis query or an ad-hoc statement infers nothing, so it runs no
+    Spark job."""
     eng = Engine(spark, str(lake / "posts"), str(lake / "comments"))
-    assert jobs_in_group(spark, "engine-views", eng._ensure_views) == 0
+
+    def build():
+        eng.analysis("q01")
+        eng.analysis("q08")
+        eng.sql("SELECT * FROM post_performance")
+
+    assert jobs_in_group(spark, "engine-build", build) == 0
+
+
+def test_analysis_leaves_no_session_view(spark, lake):
+    """``analysis`` binds the Engine's frames for the one call: the
+    session's table list is the same before and after."""
+    for view in ("posts", "comments", "post_performance"):
+        spark.catalog.dropTempView(view)
+    before = sorted(t.name for t in spark.catalog.listTables())
+    eng = Engine(spark, str(lake / "posts"), str(lake / "comments"))
+    for name in sorted(ANALYSIS_QUERIES):
+        eng.analysis(name, as_of=AS_OF).collect()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
 
 
 @pytest.mark.parametrize("partition_by", [("subreddit",), ()])
@@ -167,33 +189,79 @@ def test_one_partition_path_keeps_results(spark, lake):
         assert want[name], name
 
 
-def test_interleaved_engines_read_their_own_lakes(
-    spark, lake, posts, comments, tmp_path, monkeypatch
-):
-    """The views are session-global: two Engines over different lakes
-    that take turns each read their own lake, and an Engine registers
-    its views again only after the other one has registered."""
-    from reddit_etl_spark import engine as engine_mod
+_ALL = ["MachineLearning", "Python", "datascience"]
 
+
+@pytest.fixture
+def two_engines(spark, lake, posts, comments, tmp_path):
+    """An Engine over the three-subreddit lake and one over a lake of
+    its Python posts only, in one session."""
     one = posts.filter(F.col("subreddit") == "Python")
     append_parquet(one, str(tmp_path / "p"), partition_by=("subreddit",))
     append_parquet(comments, str(tmp_path / "c"))
-    registered = []
-    register_views = engine_mod.q.register_views
+    return (
+        Engine(spark, str(lake / "posts"), str(lake / "comments")),
+        Engine(spark, str(tmp_path / "p"), str(tmp_path / "c")),
+    )
 
-    def register(posts, comments):
-        registered.append(id(posts))
-        register_views(posts, comments)
 
-    monkeypatch.setattr(engine_mod.q, "register_views", register)
-    full = Engine(spark, str(lake / "posts"), str(lake / "comments"))
-    python = Engine(spark, str(tmp_path / "p"), str(tmp_path / "c"))
+def _subreddits(df) -> list[str]:
+    return sorted(r.subreddit for r in df.collect())
 
-    def subreddits(eng):
-        return sorted(r.subreddit for r in eng.analysis("q01").collect())
 
+def test_interleaved_engines_read_their_own_lakes(two_engines):
+    """Two Engines over different lakes that take turns each read their
+    own lake, through both query paths."""
+    full, python = two_engines
     for _ in range(2):
-        assert subreddits(full) == ["MachineLearning", "Python", "datascience"]
-        assert subreddits(full) == ["MachineLearning", "Python", "datascience"]
-        assert subreddits(python) == ["Python"]
-    assert registered == [id(full.posts), id(python.posts)] * 2
+        assert _subreddits(full.analysis("q01")) == _ALL
+        assert _subreddits(full.analysis("q01")) == _ALL
+        assert _subreddits(python.analysis("q01")) == ["Python"]
+        assert _subreddits(python.sql("SELECT DISTINCT subreddit FROM posts")) == [
+            "Python"
+        ]
+        assert _subreddits(full.sql("SELECT DISTINCT subreddit FROM posts")) == _ALL
+
+
+def _race(engines, build, reps=40) -> list[list[list[str]]]:
+    """Each Engine runs ``build(engine)`` and collects it ``reps`` times
+    on a thread of its own, the threads started together; returns the
+    sorted subreddits of every result, per Engine."""
+    got = [[] for _ in engines]
+    errors = []
+    start = threading.Barrier(len(engines))
+
+    def work(i):
+        try:
+            start.wait(timeout=60)
+            for _ in range(reps):
+                got[i].append(_subreddits(build(engines[i])))
+        except Exception as e:  # noqa: BLE001 - reported by the caller
+            errors.append(e)
+
+    threads = [InheritableThread(target=work, args=(i,)) for i in range(len(engines))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    return got
+
+
+@pytest.mark.parametrize("build", [
+    lambda eng: eng.analysis("q01"),
+    lambda eng: eng.sql("SELECT DISTINCT subreddit FROM posts"),
+], ids=["analysis", "sql"])
+def test_concurrent_engines_read_their_own_lakes(two_engines, build):
+    """Two Engines over one session, each querying on its own thread at
+    once, both through ``analysis`` and through the session views of
+    ``sql``: every result holds the Engine's own lake."""
+    full, python = _race(two_engines, build)
+    assert full == [_ALL] * 40
+    assert python == [["Python"]] * 40

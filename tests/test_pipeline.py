@@ -367,11 +367,18 @@ def test_pipeline_loads_overlap(spark, tmp_path, monkeypatch):
 
 def test_pipeline_refuses_a_shared_path(spark, tmp_path):
     """The loads of a batch run at once, and two appends to one path
-    share its committer's _temporary directory."""
+    share its committer's _temporary directory, however the path is
+    spelled. The check runs before the source is called."""
     src = MockRedditSource(_mock_posts())
     p = str(tmp_path / "lake")
-    with pytest.raises(ValueError, match="three different paths"):
-        run_pipeline(spark, src, ["python"], p, p, str(tmp_path / "stats"))
+    spellings = (p, p + "/", "file://" + p, f"{tmp_path}/x/../lake",
+                 os.path.relpath(p))
+    for shared in spellings:
+        with pytest.raises(ValueError, match="three different paths"):
+            run_pipeline(
+                spark, src, ["python"], p, shared, str(tmp_path / "stats")
+            )
+    assert src.post_calls == 0
     assert not os.path.exists(p)
 
 
